@@ -318,56 +318,63 @@ final class GraftTcpServer(executor: NbqlExecutor, port: Int = 0,
     Wire.writeFrame(out, Wire.CmdQueryEnd, Wire.encodeQueryEnd(delivered))
   }
 
+  /** Fields are read by ORDINAL from `schema`, as the HTTP encoder
+    * ([[RowJson.toJValue]]) does: rows served by the driver-resident
+    * tiers or the result cache are schema-less, so by-name reads fail. */
   private def toPointItem(row: Row, schema: StructType, isAgg: Boolean): Wire.PointItem = {
     val names = schema.fieldNames
-    def has(n: String) = names.contains(n)
+    def at(n: String): Int = names.indexOf(n)
+    def has(n: String) = at(n) >= 0
+    def get[T](n: String): T = row.getAs[T](at(n))
     def tagsOf: Map[String, String] =
-      if (has("tags")) Option(row.getAs[scala.collection.Map[String, String]]("tags"))
+      if (has("tags")) Option(get[scala.collection.Map[String, String]]("tags"))
         .map(_.toMap).getOrElse(Map.empty)
       else Map.empty
     if (has("fields")) {
       // raw point row: metric, tags, timestamp, fields, seq
-      val fv = Option(row.getAs[scala.collection.Map[String, Row]]("fields"))
+      val vt = schema("fields").dataType.asInstanceOf[MapType]
+        .valueType.asInstanceOf[StructType]
+      val Seq(iD, iL, iS, iB) = Seq("d", "l", "s", "b").map(vt.fieldIndex)
+      val fv = Option(get[scala.collection.Map[String, Row]]("fields"))
         .map(_.toMap).getOrElse(Map.empty)
         .map { case (k, s) =>
           k -> (if (s == null) FieldValue.NilValue
-          else FieldValue(Option(s.getAs[java.lang.Double]("d")).map(_.doubleValue()),
-            Option(s.getAs[java.lang.Long]("l")).map(_.longValue()),
-            Option(s.getAs[String]("s")),
-            Option(s.getAs[java.lang.Boolean]("b")).map(_.booleanValue())))
+          else FieldValue(Option(s.getAs[java.lang.Double](iD)).map(_.doubleValue()),
+            Option(s.getAs[java.lang.Long](iL)).map(_.longValue()),
+            Option(s.getAs[String](iS)),
+            Option(s.getAs[java.lang.Boolean](iB)).map(_.booleanValue())))
         }
-      Wire.PointItem(if (has("seq")) row.getAs[Long]("seq") else 0L,
-        if (has("metric")) row.getAs[String]("metric") else "",
-        tagsOf, row.getAs[Long]("timestamp"), fv, 0L, Nil, isAggregated = false)
+      Wire.PointItem(if (has("seq")) get[Long]("seq") else 0L,
+        if (has("metric")) get[String]("metric") else "",
+        tagsOf, get[Long]("timestamp"), fv, 0L, Nil, isAggregated = false)
     } else if (isAgg) {
-      val ws = if (has("window_start")) row.getAs[Long]("window_start")
-        else row.getAs[Long]("timestamp")
+      val ws = if (has("window_start")) get[Long]("window_start")
+        else get[Long]("timestamp")
       val skip = Set("metric", "tags", "series_key", "window_start", "window_end",
         "timestamp")
-      val aggs = schema.fields.iterator.filterNot(f => skip(f.name)).flatMap { f =>
-        val v: Option[Double] = f.dataType match {
-          case DoubleType | FloatType =>
-            Option(row.getAs[Number](f.name)).map(_.doubleValue())
-          case LongType | IntegerType =>
-            Option(row.getAs[Number](f.name)).map(_.doubleValue())
-          case _ => None
-        }
-        v.map(f.name -> _)
-      }.toSeq
-      Wire.PointItem(0L, if (has("metric")) row.getAs[String]("metric") else "",
+      val aggs = schema.fields.iterator.zipWithIndex
+        .filterNot { case (f, _) => skip(f.name) }.flatMap { case (f, i) =>
+          val v: Option[Double] = f.dataType match {
+            case DoubleType | FloatType | LongType | IntegerType =>
+              Option(row.getAs[Number](i)).map(_.doubleValue())
+            case _ => None
+          }
+          v.map(f.name -> _)
+        }.toSeq
+      Wire.PointItem(0L, if (has("metric")) get[String]("metric") else "",
         tagsOf, ws, Map.empty, ws, aggs, isAggregated = true)
     } else {
       // SHOW-style rows: every column rides as a field value
-      val fv = schema.fields.iterator.map { f =>
-        val v = if (row.isNullAt(row.fieldIndex(f.name))) FieldValue.NilValue
+      val fv = schema.fields.iterator.zipWithIndex.map { case (f, i) =>
+        val v = if (row.isNullAt(i)) FieldValue.NilValue
         else f.dataType match {
-          case StringType => FieldValue.ofString(row.getAs[String](f.name))
+          case StringType => FieldValue.ofString(row.getString(i))
           case LongType | IntegerType =>
-            FieldValue.ofLong(row.getAs[Number](f.name).longValue())
+            FieldValue.ofLong(row.getAs[Number](i).longValue())
           case DoubleType | FloatType =>
-            FieldValue.ofDouble(row.getAs[Number](f.name).doubleValue())
-          case BooleanType => FieldValue.ofBool(row.getAs[Boolean](f.name))
-          case _ => FieldValue.ofString(String.valueOf(row.get(row.fieldIndex(f.name))))
+            FieldValue.ofDouble(row.getAs[Number](i).doubleValue())
+          case BooleanType => FieldValue.ofBool(row.getBoolean(i))
+          case _ => FieldValue.ofString(String.valueOf(row.get(i)))
         }
         f.name -> v
       }.toMap

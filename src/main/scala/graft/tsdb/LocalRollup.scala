@@ -3,34 +3,45 @@ package graft.tsdb
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Driver-resident rollup serving: answer a [[Rollup.supports]]-eligible
-  * downsample query by re-aggregating COLLECTED rollup partial rows in
-  * pure Scala — no Spark job, no plan, no codegen.
+/** Driver-resident rollup serving: answer rollup-eligible queries by
+  * folding COLLECTED rollup partial rows in pure Scala — no Spark job, no
+  * plan, no codegen.
   *
   * Why it exists: a materialized rollup is small BY CONSTRUCTION
   * (|series| × range/interval rows, independent of raw point count), so
   * for dashboard-hot metrics the whole frame fits on the driver the same
-  * way [[TsdbEngine]]'s raw-scan local tier does. Re-aggregating a few
-  * thousand partial rows takes microseconds; the Spark path pays a
-  * ~100 ms+ fixed planning/codegen/scheduling floor per query REGARDLESS
-  * of data volume — which is exactly why the routed-vs-raw serving win
-  * was invisible at bench density. Serving rollups driver-side removes
-  * that floor entirely while raw queries keep paying it in proportion to
-  * their (at 100 TB: enormous) scan.
+  * way [[TsdbEngine]]'s raw-scan local tier does. Folding a few thousand
+  * partial rows takes microseconds; the Spark path pays a ~100 ms+ fixed
+  * planning/codegen/scheduling floor per query REGARDLESS of data volume.
   *
-  * Semantics are a row-for-row mirror of [[Rollup.run]] +
-  * [[QueryEngine.shapeDownsampled]] + [[QueryEngine.applyCursorLimit]]
-  * (spec-asserted identical): same window math, same NaN/empty-set
-  * conventions, same first/last stream-order merge, same empty-window
-  * fill, ordering, cursor keyset and limit. Percentile (`p<N>`) specs on
-  * a WITH DIGESTS rollup merge their t-digest sketches driver-side with
-  * the same replace-empty/merge fold as `TDigestMergeQuantileAgg`; like
-  * the Spark path they follow the APPROXIMATE digest contract — and
-  * since [[graft.functions.TDigest.compress]] sorts centroids by mean,
-  * small-window sketches (singleton centroids) reproduce the Spark
-  * merge bit-for-bit.
-  */
+  * Two shapes share one row filter ([[Frame]]: `p`'s metric, tag
+  * predicates and [startNs, endNs] window range):
+  *
+  *  - downsamples ([[run]], [[runByTags]]) — a row-for-row mirror of
+  *    [[Rollup.run]] + [[QueryEngine.shapeDownsampled]] +
+  *    [[QueryEngine.applyCursorLimit]] (spec-asserted identical): same
+  *    window math, NaN/empty-set conventions, first/last stream-order
+  *    merge, empty-window fill, ordering, cursor keyset and limit.
+  *    Percentile (`p<N>`) specs merge t-digest sketches with the same
+  *    replace-empty/merge fold as `TDigestMergeQuantileAgg` (the
+  *    APPROXIMATE digest contract; singleton-centroid sketches reproduce
+  *    the Spark merge bit-for-bit);
+  *  - the ANALYZE folds — one driver ([[perSeries]]) groups the kept rows
+  *    by series in window order, runs a fold per series, and emits in
+  *    UTF-8 series_key order cut to LIMIT. The counter verbs (DELTA,
+  *    RESETS, CHANGES, whole-range and BY) are projections of ONE
+  *    [[Counter]] state; a whole-range verb is the one-target-per-series
+  *    case of its BY form. The engine reaches these folds through the
+  *    rollup routing table ([[AnalyzeRoutes]]), whose gate is the same
+  *    predicate the Spark rollup route checks.
+  *
+  * The ANALYZE folds require `rows` sorted by window_start (the resident
+  * tier's invariant): each series' windows then arrive in time order, so
+  * the first/last non-empty window is the first/last sample and boundary
+  * pairs are a single pass. */
 object LocalRollup {
+
+  private type Rows = scala.collection.IndexedSeq[Row]
 
   /** Output schema of [[run]] — matches the Spark downsample path's
     * column order and types (count → long, all else → double). */
@@ -42,6 +53,24 @@ object LocalRollup {
       StructField("window_end", LongType)) ++
       p.aggs.map(s => StructField(s.outputName,
         if (s.func == "count") LongType else DoubleType)))
+
+  /** Ordinals of the partial frame's columns, and the row filter every
+    * fold shares: `p`'s metric, tag predicates and [startNs, endNs]
+    * window range. */
+  private final class Frame(schema: StructType, p: QueryParams) {
+    private val endNs = p.endNs.get
+    val ws: Int = schema.fieldIndex("window_start")
+    val sk: Int = schema.fieldIndex("series_key")
+    val metric: Int = schema.fieldIndex("metric")
+    val tags: Int = schema.fieldIndex("tags")
+    /** Ordinal of `name`; -1 when the frame does not store it. */
+    def apply(name: String): Int = schema.fieldNames.indexOf(name)
+    def keeps(r: Row): Boolean = {
+      val w = r.getLong(ws)
+      w >= p.startNs && w <= endNs && r.getString(metric) == p.metric &&
+        tagsMatch(r, tags, p)
+    }
+  }
 
   /** Column ordinals of one field's stored partials (`tdigest` = -1
     * when the frame stores no sketches or no percentile spec needs it). */
@@ -81,29 +110,22 @@ object LocalRollup {
   def run(rows: Array[Row], schema: StructType, p: QueryParams,
       rollupIntervalNs: Long): Array[Row] = {
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
     val iSk = schema.fieldIndex("series_key")
-    // windowBounds: aligned may precede startNs when interval > rollup's
-    val aligned = startAligned(p, interval)
-    val lastW = if (endNs <= aligned) aligned
-                else aligned + ((endNs - 1 - aligned) / interval) * interval
+    val (aligned, lastW) = windowBounds(p, interval)
     val groups = accumulate(rows, schema, p, interval, lastW,
       r => r.getString(iSk))
-    runShaped(groups, p, interval, aligned, lastW)
+    shapeEmitted(groups, g => finalizeGroup(g, p), p, interval, aligned, lastW)
   }
 
-  /** Shared accumulation: filter (metric/tags/window range) and fold
-    * partial rows into per-(key, target window) [[GroupState]]s. The key
-    * extractor is the only difference between per-series serving
-    * ([[run]] — series_key) and tag-grouped serving ([[runByTags]] —
-    * the tag-value tuple). */
+  /** Shared accumulation: filter ([[Frame.keeps]]) and fold partial rows
+    * into per-(key, target window) [[GroupState]]s. The key extractor is
+    * the only difference between per-series serving ([[run]] —
+    * series_key) and tag-grouped serving ([[runByTags]] — the tag-value
+    * tuple). */
   private def accumulate(rows: Array[Row], schema: StructType,
       p: QueryParams, interval: Long, lastW: Long, keyOf: Row => AnyRef):
       scala.collection.mutable.HashMap[(AnyRef, Long), GroupState] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
+    val c = new Frame(schema, p)
     val iStar = schema.fieldIndex("__cnt_star")
     val digestFields = p.aggs.filter(_.percentile.isDefined).map(_.field).toSet
     val fieldIdx = p.aggs.map(_.field).distinct.filter(_ != "*").map { f =>
@@ -120,59 +142,47 @@ object LocalRollup {
     var ri = 0
     while (ri < rows.length) {
       val r = rows(ri); ri += 1
-      if (r.getString(iMetric) == p.metric) {
-        val ws = r.getLong(iWs)
-        if (ws >= p.startNs && ws <= endNs) {
-          val target = ws - java.lang.Math.floorMod(ws, interval)
-          if (target <= lastW && tagsMatch(r, iTags, p)) {
-            val g = groups.getOrElseUpdate((keyOf(r), target),
-              new GroupState(r.getString(iMetric), r.get(iTags)))
-            g.cntStar += r.getLong(iStar)
-            fieldIdx.foreach { case (f, ix) =>
-              val st = g.fields.getOrElseUpdate(f, new FieldState)
-              st.cntAny += r.getLong(ix.cntAny)
-              st.cnt += r.getLong(ix.cnt)
-              if (!r.isNullAt(ix.sum)) { st.sum += r.getDouble(ix.sum); st.hasSum = true }
-              if (!r.isNullAt(ix.sumsq)) { st.sumsq += r.getDouble(ix.sumsq); st.hasSumsq = true }
-              if (!r.isNullAt(ix.mn)) {
-                val v = r.getDouble(ix.mn)
-                if (!st.hasMin || v < st.mn) st.mn = v
-                st.hasMin = true
-              }
-              if (!r.isNullAt(ix.mx)) {
-                val v = r.getDouble(ix.mx)
-                if (!st.hasMax || v > st.mx) st.mx = v
-                st.hasMax = true
-              }
-              val fo = ordOf(r, ix.firstOrd)
-              if (fo != null && (st.firstOrd == null || ordOrdering.lt(fo, st.firstOrd))) {
-                st.firstOrd = fo; st.first = r.getDouble(ix.first)
-              }
-              val lo = ordOf(r, ix.lastOrd)
-              if (lo != null && (st.lastOrd == null || ordOrdering.gt(lo, st.lastOrd))) {
-                st.lastOrd = lo; st.last = r.getDouble(ix.last)
-              }
-              if (ix.tdigest >= 0 && !r.isNullAt(ix.tdigest)) {
-                val in = graft.functions.TDigest.deserialize(
-                  r.getAs[Array[Byte]](ix.tdigest))
-                if (st.digest == null) st.digest = in else st.digest.merge(in)
-              }
+      if (c.keeps(r)) {
+        val ws = r.getLong(c.ws)
+        val target = ws - java.lang.Math.floorMod(ws, interval)
+        if (target <= lastW) {
+          val g = groups.getOrElseUpdate((keyOf(r), target),
+            new GroupState(r.getString(c.metric), r.get(c.tags)))
+          g.cntStar += r.getLong(iStar)
+          fieldIdx.foreach { case (f, ix) =>
+            val st = g.fields.getOrElseUpdate(f, new FieldState)
+            st.cntAny += r.getLong(ix.cntAny)
+            st.cnt += r.getLong(ix.cnt)
+            if (!r.isNullAt(ix.sum)) { st.sum += r.getDouble(ix.sum); st.hasSum = true }
+            if (!r.isNullAt(ix.sumsq)) { st.sumsq += r.getDouble(ix.sumsq); st.hasSumsq = true }
+            if (!r.isNullAt(ix.mn)) {
+              val v = r.getDouble(ix.mn)
+              if (!st.hasMin || v < st.mn) st.mn = v
+              st.hasMin = true
+            }
+            if (!r.isNullAt(ix.mx)) {
+              val v = r.getDouble(ix.mx)
+              if (!st.hasMax || v > st.mx) st.mx = v
+              st.hasMax = true
+            }
+            val fo = ordOf(r, ix.firstOrd)
+            if (fo != null && (st.firstOrd == null || ordOrdering.lt(fo, st.firstOrd))) {
+              st.firstOrd = fo; st.first = r.getDouble(ix.first)
+            }
+            val lo = ordOf(r, ix.lastOrd)
+            if (lo != null && (st.lastOrd == null || ordOrdering.gt(lo, st.lastOrd))) {
+              st.lastOrd = lo; st.last = r.getDouble(ix.last)
+            }
+            if (ix.tdigest >= 0 && !r.isNullAt(ix.tdigest)) {
+              val in = graft.functions.TDigest.deserialize(
+                r.getAs[Array[Byte]](ix.tdigest))
+              if (st.digest == null) st.digest = in else st.digest.merge(in)
             }
           }
         }
       }
     }
-
     groups
-  }
-
-  /** Finalize + shape (fill / order / cursor / limit) — the back half of
-    * the per-series serving path. */
-  private def runShaped(
-      groups: scala.collection.mutable.HashMap[(AnyRef, Long), GroupState],
-      p: QueryParams, interval: Long, aligned: Long, lastW: Long): Array[Row] = {
-    def finalized(g: GroupState): Seq[Any] = finalizeGroup(g, p)
-    shapeEmitted(groups, finalized, p, interval, aligned, lastW)
   }
 
   /** reAgg mirror shared by the per-series and tag-grouped paths. */
@@ -315,11 +325,8 @@ object LocalRollup {
     require(p.fill == FillNone && !p.emitEmptyWindows && p.afterKey.isEmpty,
       "per-series shapes don't apply to GROUP BY TAGS")
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
     val iTags = schema.fieldIndex("tags")
-    val aligned = startAligned(p, interval)
-    val lastW = if (endNs <= aligned) aligned
-                else aligned + ((endNs - 1 - aligned) / interval) * interval
+    val (_, lastW) = windowBounds(p, interval)
     def tagTuple(r: Row): AnyRef = {
       val tg =
         if (r.isNullAt(iTags)) null
@@ -358,621 +365,258 @@ object LocalRollup {
     p.limit.fold(sorted)(n => sorted.take(n.toInt))
   }
 
-  /** Output schema of [[runDelta]] — matches [[Rollup.runDelta]]. */
-  def outputSchemaDelta: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("n_points", LongType),
-    StructField("first_ts", LongType),
-    StructField("last_ts", LongType),
-    StructField("delta", DoubleType),
-    StructField("increase", DoubleType)))
-
-  private final class DeltaState(val metric: String, val tags: Any) {
-    var n = 0L
-    var firstOrd: (Long, String, Long) = null; var firstVal = 0.0
-    var lastOrd: (Long, String, Long) = null; var lastVal = 0.0
-    var inc = 0.0
-    var prevLast = 0.0; var hasPrevLast = false
+  /** The driver of every ANALYZE fold: keep `p`'s rows, group them by
+    * series (window order kept), run `fold` per series in UTF-8
+    * series_key order, and cut to LIMIT (the Spark path's df.limit).
+    * `fold` gets the series' output prefix (metric, tags, series_key). */
+  private def perSeries(rows: Array[Row], schema: StructType, p: QueryParams)(
+      fold: (Frame, Seq[Any], Rows) => Iterator[Row]): Array[Row] = {
+    val c = new Frame(schema, p)
+    val bySeries = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[Row]]
+    rows.foreach { r =>
+      if (c.keeps(r)) bySeries.getOrElseUpdate(r.getString(c.sk),
+        scala.collection.mutable.ArrayBuffer.empty[Row]) += r
+    }
+    val out = bySeries.keys.toArray.sorted(Utf8Order).iterator.flatMap { sk =>
+      val series = bySeries(sk)
+      fold(c, Seq(series.head.get(c.metric), series.head.get(c.tags), sk), series)
+    }
+    p.limit.fold(out)(n => out.take(n.toInt)).toArray
   }
+
+  /** One series' rows grouped by target window, in window order
+    * (`windowNs` = 0: the whole range is one group, keyed 0). */
+  private def targets(c: Frame, series: Rows,
+      windowNs: Long): Seq[(Long, Rows)] =
+    if (windowNs == 0L) Seq(0L -> series)
+    else series.groupBy { r =>
+      val ws = r.getLong(c.ws); ws - java.lang.Math.floorMod(ws, windowNs)
+    }.toSeq.sortBy(_._1)
+
+  private def tsOf(r: Row, i: Int): Long = r.getStruct(i).getLong(0)
+  private def dbl(r: Row, i: Int): Double =
+    if (i < 0 || r.isNullAt(i)) 0.0 else r.getDouble(i)
+  private def lng(r: Row, i: Int): Long =
+    if (i < 0 || r.isNullAt(i)) 0L else r.getLong(i)
+
+  /** The one counter state behind DELTA, RESETS and CHANGES (whole-range
+    * and BY): sample count, first/last sample, reset-aware increase,
+    * resets and changes over one target window. */
+  private final class Counter {
+    var n = 0L; var seen = false
+    var firstTs = 0L; var firstVal = 0.0; var lastTs = 0L; var lastVal = 0.0
+    var inc = 0.0; var resets = 0L; var changes = 0L
+    def delta: Double = lastVal - firstVal
+  }
+
+  /** Fold each series into one [[Counter]] per target window. A pair of
+    * consecutive samples inside one rollup window is counted by the
+    * stored `__inc`/`__resets`/`__changes` partials; a pair spanning two
+    * non-empty windows (previous window's last → this window's first) is
+    * counted here, in the LATER sample's target (the continuous-counter
+    * contract). Target windows with no numeric sample emit nothing. */
+  private def counters(rows: Array[Row], schema: StructType, p: QueryParams,
+      field: String, windowNs: Long)(
+      emit: (Long, Counter) => Seq[Any]): Array[Row] =
+    perSeries(rows, schema, p) { (c, key, series) =>
+      val iCnt = c(s"${field}__cnt"); val iFo = c(s"${field}__first_ord")
+      val iFv = c(s"${field}__first"); val iLo = c(s"${field}__last_ord")
+      val iLv = c(s"${field}__last"); val iInc = c(s"${field}__inc")
+      val iRst = c(s"${field}__resets"); val iChg = c(s"${field}__changes")
+      var hasPrev = false; var prev = 0.0
+      targets(c, series, windowNs).iterator.flatMap { case (w, run) =>
+        val st = new Counter
+        run.foreach { r =>
+          st.n += r.getLong(iCnt)
+          if (!r.isNullAt(iFo)) { // window has numeric samples
+            val fv = r.getDouble(iFv)
+            if (!st.seen) { st.seen = true; st.firstTs = tsOf(r, iFo); st.firstVal = fv }
+            if (hasPrev) { // boundary pair
+              st.inc += (if (fv < prev) fv else fv - prev)
+              if (fv < prev) st.resets += 1L
+              if (fv != prev) st.changes += 1L
+            }
+            st.resets += lng(r, iRst); st.changes += lng(r, iChg)
+            st.lastTs = tsOf(r, iLo); st.lastVal = r.getDouble(iLv)
+            prev = st.lastVal; hasPrev = true
+          }
+          st.inc += dbl(r, iInc)
+        }
+        if (st.n > 0) Iterator.single(Row.fromSeq(key ++ emit(w, st)))
+        else Iterator.empty
+      }
+    }
 
   /** Driver-resident mirror of [[Rollup.runDelta]]: whole-range
-    * delta/increase folded from resident partial rows in pure Scala —
-    * the same in-window `__inc` + boundary-pair decomposition, no Spark
-    * job. `rows` must be sorted by window_start (the resident tier's
-    * invariant), so each series' windows arrive in order and the
-    * boundary fold is a single pass. */
+    * delta/increase, the [[counters]] fold with one target per series. */
   def runDelta(rows: Array[Row], schema: StructType, p: QueryParams,
-      field: String): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iFo = schema.fieldIndex(s"${field}__first_ord")
-    val iFv = schema.fieldIndex(s"${field}__first")
-    val iLo = schema.fieldIndex(s"${field}__last_ord")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iInc = schema.fieldIndex(s"${field}__inc")
-    val bySeries =
-      scala.collection.mutable.LinkedHashMap.empty[String, DeltaState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val st = bySeries.getOrElseUpdate(r.getString(iSk),
-          new DeltaState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        val fo = ordOf(r, iFo)
-        if (fo != null) { // window has numeric samples
-          val fv = r.getDouble(iFv)
-          if (st.firstOrd == null || ordOrdering.lt(fo, st.firstOrd)) {
-            st.firstOrd = fo; st.firstVal = fv
-          }
-          // boundary pair: previous non-empty window's last → this first
-          if (st.hasPrevLast)
-            st.inc += (if (fv < st.prevLast) fv else fv - st.prevLast)
-          val lo = ordOf(r, iLo)
-          if (st.lastOrd == null || ordOrdering.gt(lo, st.lastOrd)) {
-            st.lastOrd = lo; st.lastVal = r.getDouble(iLv)
-          }
-          st.prevLast = r.getDouble(iLv); st.hasPrevLast = true
-        }
-        if (!r.isNullAt(iInc)) st.inc += r.getDouble(iInc)
-      }
+      field: String): Array[Row] =
+    counters(rows, schema, p, field, 0L) { (_, st) =>
+      Seq[Any](st.n, st.firstTs, st.lastTs, st.delta, st.inc)
     }
-    val out = bySeries.iterator
-      .filter(_._2.n > 0)
-      .toArray
-      .sortBy(_._1)(Utf8Order)
-      .map { case (sk, st) =>
-        Row(st.metric, st.tags, sk, st.n, st.firstOrd._1, st.lastOrd._1,
-          st.lastVal - st.firstVal, st.inc)
-      }
-    // LIMIT parity with the Spark path ([[TsdbEngine.analyze]]'s df.limit)
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
 
-  /** Output schema of [[runTransitions]] — matches
-    * [[Rollup.runTransitions]] projected to the verb's column
-    * (`keep` = "resets" | "changes"), the [[TsdbEngine.analyze]] output
-    * shape for ANALYZE RESETS/CHANGES. */
-  def outputSchemaTransitions(keep: String): StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("n_points", LongType),
-    StructField(keep, LongType)))
+  /** Driver-resident mirror of [[Rollup.runDeltaBy]]: the [[counters]]
+    * fold per target window. `windowNs` must be a multiple of the rollup
+    * grain (caller-gated). */
+  def runDeltaBy(rows: Array[Row], schema: StructType, p: QueryParams,
+      field: String, windowNs: Long): Array[Row] =
+    counters(rows, schema, p, field, windowNs) { (w, st) =>
+      Seq[Any](w, st.n, st.delta, st.inc)
+    }
 
-  private final class TransState(val metric: String, val tags: Any) {
-    var n = 0L
-    var resets = 0L; var changes = 0L
-    var prevLast = 0.0; var hasPrevLast = false
-  }
-
-  /** Driver-resident mirror of [[Rollup.runTransitions]]: counter
-    * reset/change counts folded from resident partial rows — in-window
-    * `__resets`/`__changes` partials plus boundary-pair comparisons
-    * (previous non-empty window's last value vs this window's first).
-    * Long counts: BIT-identical to both the Spark rollup route and the
-    * raw analytic. `rows` sorted by window_start. */
+  /** Driver-resident mirror of [[Rollup.runTransitions]] projected to the
+    * verb's column (`keep` = "resets" | "changes"). Long counts:
+    * BIT-identical to both the Spark rollup route and the raw analytic. */
   def runTransitions(rows: Array[Row], schema: StructType, p: QueryParams,
-      field: String, keep: String): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iFo = schema.fieldIndex(s"${field}__first_ord")
-    val iFv = schema.fieldIndex(s"${field}__first")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iRst = schema.fieldIndex(s"${field}__resets")
-    val iChg = schema.fieldIndex(s"${field}__changes")
-    val bySeries =
-      scala.collection.mutable.LinkedHashMap.empty[String, TransState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val st = bySeries.getOrElseUpdate(r.getString(iSk),
-          new TransState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        if (ordOf(r, iFo) != null) { // window has numeric samples
-          val fv = r.getDouble(iFv)
-          if (st.hasPrevLast) { // boundary pair
-            if (fv < st.prevLast) st.resets += 1L
-            if (fv != st.prevLast) st.changes += 1L
-          }
-          if (!r.isNullAt(iRst)) st.resets += r.getLong(iRst)
-          if (!r.isNullAt(iChg)) st.changes += r.getLong(iChg)
-          st.prevLast = r.getDouble(iLv); st.hasPrevLast = true
-        }
-      }
+      field: String, keep: String): Array[Row] =
+    counters(rows, schema, p, field, 0L) { (_, st) =>
+      Seq[Any](st.n, if (keep == "resets") st.resets else st.changes)
     }
-    val out = bySeries.iterator
-      .filter(_._2.n > 0)
-      .toArray
-      .sortBy(_._1)(Utf8Order)
-      .map { case (sk, st) =>
-        Row(st.metric, st.tags, sk, st.n,
-          if (keep == "resets") st.resets else st.changes)
-      }
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
 
-  /** Output schema of the DERIV projection of [[runPredict]] —
-    * [[outputSchemaPredict]] without the forecast column. */
-  def outputSchemaDeriv: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("n_points", LongType),
-    StructField("last_ts", LongType),
-    StructField("slope_per_sec", DoubleType)))
-
-  /** Output schema of [[runPredict]] — matches [[Rollup.runPredict]]. */
-  def outputSchemaPredict: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("n_points", LongType),
-    StructField("last_ts", LongType),
-    StructField("slope_per_sec", DoubleType),
-    StructField("predicted", DoubleType)))
-
-  private final class PredictState(val metric: String, val tags: Any) {
-    var n = 0L
-    var lastOrd: (Long, String, Long) = null
-    var st = 0.0; var sv = 0.0; var stv = 0.0; var stt = 0.0
-  }
+  /** Driver-resident mirror of [[Rollup.runTransitionsBy]] projected to
+    * the verb's column. */
+  def runTransitionsBy(rows: Array[Row], schema: StructType, p: QueryParams,
+      field: String, windowNs: Long, keep: String): Array[Row] =
+    counters(rows, schema, p, field, windowNs) { (w, st) =>
+      Seq[Any](w, st.n, if (keep == "resets") st.resets else st.changes)
+    }
 
   /** Driver-resident mirror of [[Rollup.runPredict]]: least-squares
-    * trend + horizon forecast folded from resident moment partials in
-    * pure Scala (same anchor-shift algebra), no Spark job. */
+    * trend + horizon forecast from the summed moment partials (same
+    * anchor-shift algebra). */
   def runPredict(rows: Array[Row], schema: StructType, p: QueryParams,
       field: String, horizonNs: Long): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iLo = schema.fieldIndex(s"${field}__last_ord")
-    val iSv = schema.fieldIndex(s"${field}__sum")
-    val iSt = schema.fieldIndex(s"${field}__tsum")
-    val iStv = schema.fieldIndex(s"${field}__tvsum")
-    val iStt = schema.fieldIndex(s"${field}__ttsum")
-    val bySeries =
-      scala.collection.mutable.LinkedHashMap.empty[String, PredictState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val st = bySeries.getOrElseUpdate(r.getString(iSk),
-          new PredictState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        val lo = ordOf(r, iLo)
-        if (lo != null &&
-            (st.lastOrd == null || ordOrdering.gt(lo, st.lastOrd))) st.lastOrd = lo
-        if (!r.isNullAt(iSt)) st.st += r.getDouble(iSt)
-        if (!r.isNullAt(iSv)) st.sv += r.getDouble(iSv)
-        if (!r.isNullAt(iStv)) st.stv += r.getDouble(iStv)
-        if (!r.isNullAt(iStt)) st.stt += r.getDouble(iStt)
-      }
-    }
     val s = p.startNs.toDouble / 1e9
-    val out = bySeries.iterator
-      .filter(_._2.n > 0)
-      .toArray
-      .sortBy(_._1)(Utf8Order)
-      .map { case (sk, g) =>
-        val n = g.n.toDouble
-        val mt = (g.st - s * n) / n
-        val mv = g.sv / n
-        val mtv = (g.stv - s * g.sv) / n
-        val mtt = (g.stt - 2.0 * s * g.st + s * s * n) / n
+    perSeries(rows, schema, p) { (c, key, series) =>
+      val iCnt = c(s"${field}__cnt"); val iLo = c(s"${field}__last_ord")
+      val iSv = c(s"${field}__sum"); val iSt = c(s"${field}__tsum")
+      val iStv = c(s"${field}__tvsum"); val iStt = c(s"${field}__ttsum")
+      var cnt = 0L; var lastTs = 0L
+      var st = 0.0; var sv = 0.0; var stv = 0.0; var stt = 0.0
+      series.foreach { r =>
+        cnt += r.getLong(iCnt)
+        if (!r.isNullAt(iLo)) lastTs = tsOf(r, iLo)
+        st += dbl(r, iSt); sv += dbl(r, iSv); stv += dbl(r, iStv); stt += dbl(r, iStt)
+      }
+      if (cnt == 0) Iterator.empty
+      else {
+        val n = cnt.toDouble
+        val mt = (st - s * n) / n
+        val mv = sv / n
+        val mtv = (stv - s * sv) / n
+        val mtt = (stt - 2.0 * s * st + s * s * n) / n
         val varT = mtt - mt * mt
-        val lastTs = g.lastOrd._1
-        if (g.n >= 2 && varT > 0) {
-          val slope = (mtv - mt * mv) / varT
-          val targetT = (lastTs - p.startNs + horizonNs).toDouble / 1e9
-          Row(g.metric, g.tags, sk, g.n, lastTs,
-            slope, mv + slope * (targetT - mt))
-        } else Row(g.metric, g.tags, sk, g.n, lastTs, null, null)
-      }
-    // LIMIT parity with the Spark path ([[TsdbEngine.analyze]]'s df.limit)
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
-
-  /** Output schema of [[runDeltaBy]] — matches [[Rollup.runDeltaBy]]. */
-  /** Output schema of the RATE BY projection of [[runDeltaBy]] —
-    * windowed increase over the window duration. */
-  def outputSchemaRateBy: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("window_start", LongType),
-    StructField("n_points", LongType),
-    StructField("rate_per_sec", DoubleType)))
-
-  def outputSchemaDeltaBy: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("window_start", LongType),
-    StructField("n_points", LongType),
-    StructField("delta", DoubleType),
-    StructField("increase", DoubleType)))
-
-  private final class DeltaByState(val metric: String, val tags: Any) {
-    var n = 0L
-    var firstOrd: (Long, String, Long) = null; var firstVal = 0.0
-    var lastOrd: (Long, String, Long) = null; var lastVal = 0.0
-    var inc = 0.0
-  }
-
-  /** Driver-resident mirror of [[Rollup.runDeltaBy]]: windowed
-    * delta/increase folded from resident partial rows in pure Scala —
-    * the [[runDelta]] decomposition grouped into target windows, the
-    * boundary pair landing in the LATER point's target
-    * (continuous-counter contract). `windowNs` must be a multiple of the
-    * rollup grain (caller-gated); `rows` sorted by window_start. */
-  def runDeltaBy(rows: Array[Row], schema: StructType, p: QueryParams,
-      field: String, windowNs: Long): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iFo = schema.fieldIndex(s"${field}__first_ord")
-    val iFv = schema.fieldIndex(s"${field}__first")
-    val iLo = schema.fieldIndex(s"${field}__last_ord")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iInc = schema.fieldIndex(s"${field}__inc")
-    // per-series boundary carry runs across the WHOLE range
-    val prevLast = scala.collection.mutable.HashMap.empty[String, Double]
-    val groups =
-      scala.collection.mutable.LinkedHashMap.empty[(String, Long), DeltaByState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val sk = r.getString(iSk)
-        val target = ws - java.lang.Math.floorMod(ws, windowNs)
-        val st = groups.getOrElseUpdate((sk, target),
-          new DeltaByState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        val fo = ordOf(r, iFo)
-        if (fo != null) { // window has numeric samples
-          val fv = r.getDouble(iFv)
-          if (st.firstOrd == null || ordOrdering.lt(fo, st.firstOrd)) {
-            st.firstOrd = fo; st.firstVal = fv
-          }
-          prevLast.get(sk).foreach { pl =>
-            st.inc += (if (fv < pl) fv else fv - pl)
-          }
-          val lo = ordOf(r, iLo)
-          if (st.lastOrd == null || ordOrdering.gt(lo, st.lastOrd)) {
-            st.lastOrd = lo; st.lastVal = r.getDouble(iLv)
-          }
-          prevLast(sk) = r.getDouble(iLv)
-        }
-        if (!r.isNullAt(iInc)) st.inc += r.getDouble(iInc)
+        Iterator.single(Row.fromSeq(key ++ (
+          if (cnt >= 2 && varT > 0) {
+            val slope = (mtv - mt * mv) / varT
+            val targetT = (lastTs - p.startNs + horizonNs).toDouble / 1e9
+            Seq[Any](cnt, lastTs, slope, mv + slope * (targetT - mt))
+          } else Seq[Any](cnt, lastTs, null, null))))
       }
     }
-    val out = groups.iterator
-      .filter(_._2.n > 0)
-      .toArray
-      .sortBy { case ((sk, w), _) => (sk, w) }(
-        Ordering.Tuple2(Utf8Order, Ordering.Long))
-      .map { case ((sk, w), st) =>
-        Row(st.metric, st.tags, sk, w, st.n, st.lastVal - st.firstVal, st.inc)
-      }
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
-
-  /** Output schema of [[runTransitionsBy]] — matches
-    * [[Rollup.runTransitionsBy]] projected to the verb's column. */
-  def outputSchemaTransitionsBy(keep: String): StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("window_start", LongType),
-    StructField("n_points", LongType),
-    StructField(keep, LongType)))
-
-  private final class TransByState(val metric: String, val tags: Any) {
-    var n = 0L; var resets = 0L; var changes = 0L
-  }
-
-  /** Driver-resident mirror of [[Rollup.runTransitionsBy]]: windowed
-    * reset/change counts folded from resident partials — the
-    * [[runTransitions]] decomposition grouped by target window, boundary
-    * pairs (previous non-empty window's last vs this window's first)
-    * landing in the LATER point's target. Long counts: BIT-identical to
-    * the Spark routes. `rows` sorted by window_start. */
-  def runTransitionsBy(rows: Array[Row], schema: StructType, p: QueryParams,
-      field: String, windowNs: Long, keep: String): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iFo = schema.fieldIndex(s"${field}__first_ord")
-    val iFv = schema.fieldIndex(s"${field}__first")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iRst = schema.fieldIndex(s"${field}__resets")
-    val iChg = schema.fieldIndex(s"${field}__changes")
-    // per-series boundary carry runs across the WHOLE range
-    val prevLast = scala.collection.mutable.HashMap.empty[String, Double]
-    val groups =
-      scala.collection.mutable.LinkedHashMap.empty[(String, Long), TransByState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val sk = r.getString(iSk)
-        val target = ws - java.lang.Math.floorMod(ws, windowNs)
-        val st = groups.getOrElseUpdate((sk, target),
-          new TransByState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        if (ordOf(r, iFo) != null) { // window has numeric samples
-          val fv = r.getDouble(iFv)
-          prevLast.get(sk).foreach { pl =>
-            if (fv < pl) st.resets += 1L
-            if (fv != pl) st.changes += 1L
-          }
-          if (!r.isNullAt(iRst)) st.resets += r.getLong(iRst)
-          if (!r.isNullAt(iChg)) st.changes += r.getLong(iChg)
-          prevLast(sk) = r.getDouble(iLv)
-        }
-      }
-    }
-    val out = groups.iterator
-      .filter(_._2.n > 0)
-      .toArray
-      .sortBy { case ((sk, w), _) => (sk, w) }(
-        Ordering.Tuple2(Utf8Order, Ordering.Long))
-      .map { case ((sk, w), st) =>
-        Row(st.metric, st.tags, sk, w, st.n,
-          if (keep == "resets") st.resets else st.changes)
-      }
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
-
-  /** Output schema of [[runSmoothBy]] — matches [[Rollup.runSmoothBy]]. */
-  def outputSchemaSmooth(kind: String): StructType = {
-    val base = Seq(
-      StructField("metric", StringType),
-      StructField("tags", MapType(StringType, StringType)),
-      StructField("series_key", StringType),
-      StructField("window_start", LongType),
-      StructField("n_points", LongType),
-      StructField("last_ts", LongType),
-      StructField("value", DoubleType))
-    StructType(base ++ (kind match {
-      case "ewma" => Seq(StructField("ewma", DoubleType))
-      case _ => Seq(StructField("level", DoubleType),
-        StructField("trend", DoubleType), StructField("forecast", DoubleType))
-    }))
-  }
-
-  private final class SmoothByState(val metric: String, val tags: Any) {
-    var n = 0L; var lastTs = 0L; var value = 0.0; var state: Any = null
   }
 
   /** Driver-resident EWMA/HOLT … BY ([[Rollup.runSmoothBy]]'s output
-    * shape) folded from resident partial rows in pure Scala — no Spark
-    * job. The stored fold state of a target window's LAST non-empty
+    * shape). The stored fold state of a target window's LAST non-empty
     * rollup window IS the raw analytic's value at that sample
-    * ([[SmoothSpec]] contract), so the fold only picks states — rows
-    * arrive sorted by window_start (the resident tier's invariant), so
-    * the last matched row per (series, target) wins. The CALLER must
-    * have verified the range-start condition (no matched non-empty
+    * ([[SmoothSpec]] contract), so the fold only picks states. The CALLER
+    * must have verified the range-start condition (no matched non-empty
     * window before startNs) — the prefix sits outside this slice. */
   def runSmoothBy(rows: Array[Row], schema: StructType, p: QueryParams,
-      s: SmoothSpec, windowNs: Long): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${s.field}__cnt")
-    val iLo = schema.fieldIndex(s"${s.field}__last_ord")
-    val iLv = schema.fieldIndex(s"${s.field}__last")
-    val iSt = schema.fieldIndex(Rollup.smoothStateCol(s))
-    val groups =
-      scala.collection.mutable.LinkedHashMap.empty[(String, Long), SmoothByState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          r.getLong(iCnt) > 0 && tagsMatch(r, iTags, p)) {
-        val target = ws - java.lang.Math.floorMod(ws, windowNs)
-        val st = groups.getOrElseUpdate((r.getString(iSk), target),
-          new SmoothByState(r.getString(iMetric), r.get(iTags)))
-        st.n += r.getLong(iCnt)
-        st.lastTs = ordOf(r, iLo)._1
-        st.value = r.getDouble(iLv)
-        st.state = r.get(iSt)
+      s: SmoothSpec, windowNs: Long): Array[Row] =
+    perSeries(rows, schema, p) { (c, key, series) =>
+      val iCnt = c(s"${s.field}__cnt"); val iLo = c(s"${s.field}__last_ord")
+      val iLv = c(s"${s.field}__last"); val iSt = c(Rollup.smoothStateCol(s))
+      targets(c, series.filter(_.getLong(iCnt) > 0), windowNs).iterator.map {
+        case (w, run) =>
+          val r = run.last
+          val base = key ++ Seq[Any](w, run.map(_.getLong(iCnt)).sum, tsOf(r, iLo),
+            r.getDouble(iLv))
+          Row.fromSeq(base ++ (
+            if (s.kind == "ewma") Seq[Any](r.getDouble(iSt))
+            else {
+              val h = r.getStruct(iSt)
+              Seq[Any](h.getDouble(0), h.getDouble(1), h.getDouble(0) + h.getDouble(1))
+            }))
       }
     }
-    val out = groups.iterator
-      .toArray
-      .sortBy { case ((sk, w), _) => (sk, w) }(
-        Ordering.Tuple2(Utf8Order, Ordering.Long))
-      .map { case ((sk, w), st) =>
-        if (s.kind == "ewma")
-          Row(st.metric, st.tags, sk, w, st.n, st.lastTs, st.value,
-            st.state.asInstanceOf[Double])
-        else {
-          val h = st.state.asInstanceOf[Row]
-          val (lvl, trd) = (h.getDouble(0), h.getDouble(1))
-          Row(st.metric, st.tags, sk, w, st.n, st.lastTs, st.value,
-            lvl, trd, lvl + trd)
-        }
-      }
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
-
-  /** Output schema of [[runTwa]] — matches [[Rollup.runTwa]]. */
-  def outputSchemaTwa: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("window_start", LongType),
-    StructField("twa", DoubleType),
-    StructField("n_points", LongType)))
-
-  private final class TwaGroup(val metric: String, val tags: Any) {
-    var num = 0.0; var den = 0.0; var n = 0L
-  }
-  /** One non-empty rollup window pending its successor's first-ts. */
-  private final class TwaPending(var target: Long, var firstTs: Long,
-      var lastTs: Long, var lastVal: Double, var area: Double, var cnt: Long)
 
   /** Driver-resident mirror of [[Rollup.runTwa]]: LOCF time-weighted
-    * averages folded from resident partial rows — in-window `__area`
-    * integrals plus the last sample's carry to min(next non-empty
-    * window's first sample, target end). Windows are processed in
-    * window_start order per series, holding each non-empty window
-    * pending until its successor is known (the lead over the rollup
-    * frame, as a one-pass fold). `p.downsampleNs` (a multiple of the
-    * grain) is the target interval; `rows` sorted by window_start. */
+    * averages — each non-empty rollup window's in-window `__area`
+    * integral plus its last sample's carry to min(next non-empty window's
+    * first sample, target end). `p.downsampleNs` (a multiple of the
+    * grain) is the target interval. */
   def runTwa(rows: Array[Row], schema: StructType, p: QueryParams,
       field: String): Array[Row] = {
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iCnt = schema.fieldIndex(s"${field}__cnt")
-    val iFo = schema.fieldIndex(s"${field}__first_ord")
-    val iLo = schema.fieldIndex(s"${field}__last_ord")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iArea = schema.fieldIndex(s"${field}__area")
-    val groups =
-      scala.collection.mutable.LinkedHashMap.empty[(String, Long), TwaGroup]
-    val pending = scala.collection.mutable.HashMap.empty[String, TwaPending]
-    val meta = scala.collection.mutable.HashMap.empty[String, (String, Any)]
-    def close(sk: String, pd: TwaPending, nextFirstTs: Long): Unit = {
-      val wEnd = pd.target + interval
-      val closeTs = math.min(nextFirstTs, wEnd)
-      val (m, tg) = meta(sk)
-      val g = groups.getOrElseUpdate((sk, pd.target), new TwaGroup(m, tg))
-      g.num += pd.area + pd.lastVal * (closeTs - pd.lastTs).toDouble
-      g.den += (closeTs - pd.firstTs).toDouble
-      g.n += pd.cnt
-    }
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p) && r.getLong(iCnt) > 0) {
-        val sk = r.getString(iSk)
-        meta.getOrElseUpdate(sk, (r.getString(iMetric), r.get(iTags)))
-        val fo = ordOf(r, iFo)
-        val lo = ordOf(r, iLo)
-        pending.get(sk).foreach(pd => close(sk, pd, fo._1))
-        pending(sk) = new TwaPending(
-          ws - java.lang.Math.floorMod(ws, interval), fo._1, lo._1,
-          r.getDouble(iLv),
-          if (r.isNullAt(iArea)) 0.0 else r.getDouble(iArea),
-          r.getLong(iCnt))
+    perSeries(rows, schema, p) { (c, key, series) =>
+      val iCnt = c(s"${field}__cnt"); val iFo = c(s"${field}__first_ord")
+      val iLo = c(s"${field}__last_ord"); val iLv = c(s"${field}__last")
+      val iArea = c(s"${field}__area")
+      val live = series.filter(_.getLong(iCnt) > 0)
+      val nextFirst = live.iterator.drop(1).map(tsOf(_, iFo)) ++ Iterator(Long.MaxValue)
+      // (target, Σ v·dt, Σ dt, n) per rollup window
+      val parts = live.iterator.zip(nextFirst).map { case (r, next) =>
+        val ws = r.getLong(c.ws)
+        val target = ws - java.lang.Math.floorMod(ws, interval)
+        val closeTs = math.min(next, target + interval)
+        (target, dbl(r, iArea) + r.getDouble(iLv) * (closeTs - tsOf(r, iLo)).toDouble,
+          (closeTs - tsOf(r, iFo)).toDouble, r.getLong(iCnt))
+      }.toSeq
+      parts.groupBy(_._1).toSeq.sortBy(_._1).iterator.map { case (w, ps) =>
+        Row.fromSeq(key ++
+          Seq[Any](w, ps.map(_._2).sum / ps.map(_._3).sum, ps.map(_._4).sum))
       }
     }
-    pending.foreach { case (sk, pd) => close(sk, pd, Long.MaxValue) }
-    val out = groups.iterator
-      .toArray
-      .sortBy { case ((sk, w), _) => (sk, w) }(
-        Ordering.Tuple2(Utf8Order, Ordering.Long))
-      .map { case ((sk, w), g) =>
-        Row(g.metric, g.tags, sk, w, g.num / g.den, g.n)
-      }
-    p.limit.fold(out)(n => out.take(n.toInt))
   }
 
-  /** Output schema of [[runIrate]] — matches [[TsAnalytics.irate]]. */
-  def outputSchemaIrate: StructType = StructType(Seq(
-    StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("series_key", StringType),
-    StructField("timestamp", LongType),
-    StructField("value", DoubleType),
-    StructField("delta", DoubleType),
-    StructField("rate_per_sec", DoubleType)))
-
-  private final class IrateState(val metric: String, val tags: Any) {
-    // latest and second-latest numeric sample (ord, value) in range
-    var ord1: (Long, String, Long) = null; var v1 = 0.0
-    var ord2: (Long, String, Long) = null; var v2 = 0.0
-  }
-
-  /** Driver-resident IRATE ([[TsAnalytics.irate]]'s output shape) folded
-    * from resident partial rows in pure Scala — no Spark job. Each
+  /** Driver-resident IRATE ([[TsAnalytics.irate]]'s output shape). Each
     * series' trailing sample PAIR is recoverable exactly from partials:
     * a window with ≥ 2 numeric samples carries both its last
     * (`__last_ord`/`__last`) and second-to-last (`__plast_ord`/
     * `__plast`); a 1-sample window pairs with the previous non-empty
-    * window's last. `rows` must be sorted by window_start (the resident
-    * tier's invariant). Series with < 2 numeric samples emit no row;
-    * counter resets clamp to the new value (the engine's default irate
+    * window's last. Series with < 2 numeric samples emit no row; counter
+    * resets clamp to the new value (the engine's default irate
     * contract). */
   def runIrate(rows: Array[Row], schema: StructType, p: QueryParams,
-      field: String): Array[Row] = {
-    val endNs = p.endNs.get
-    val iWs = schema.fieldIndex("window_start")
-    val iSk = schema.fieldIndex("series_key")
-    val iMetric = schema.fieldIndex("metric")
-    val iTags = schema.fieldIndex("tags")
-    val iLo = schema.fieldIndex(s"${field}__last_ord")
-    val iLv = schema.fieldIndex(s"${field}__last")
-    val iPo = schema.fieldIndex(s"${field}__plast_ord")
-    val iPv = schema.fieldIndex(s"${field}__plast")
-    val bySeries =
-      scala.collection.mutable.LinkedHashMap.empty[String, IrateState]
-    rows.foreach { r =>
-      val ws = r.getLong(iWs)
-      if (ws >= p.startNs && ws <= endNs && r.getString(iMetric) == p.metric &&
-          tagsMatch(r, iTags, p)) {
-        val lo = ordOf(r, iLo)
-        if (lo != null) { // window has ≥1 numeric sample
-          val st = bySeries.getOrElseUpdate(r.getString(iSk),
-            new IrateState(r.getString(iMetric), r.get(iTags)))
-          val po = ordOf(r, iPo)
-          if (po != null) { // ≥2 samples: pair is internal to the window
-            st.ord2 = po; st.v2 = r.getDouble(iPv)
+      field: String): Array[Row] =
+    perSeries(rows, schema, p) { (c, key, series) =>
+      val iLo = c(s"${field}__last_ord"); val iLv = c(s"${field}__last")
+      val iPo = c(s"${field}__plast_ord"); val iPv = c(s"${field}__plast")
+      // latest and second-latest numeric sample (ts, value) in range
+      var t1 = 0L; var v1 = 0.0; var has1 = false
+      var t2 = 0L; var v2 = 0.0; var has2 = false
+      series.foreach { r =>
+        if (!r.isNullAt(iLo)) { // window has ≥1 numeric sample
+          if (!r.isNullAt(iPo)) { // ≥2 samples: pair is internal to the window
+            t2 = tsOf(r, iPo); v2 = r.getDouble(iPv); has2 = true
           } else { // 1 sample: pairs with the previous window's last
-            st.ord2 = st.ord1; st.v2 = st.v1
+            t2 = t1; v2 = v1; has2 = has1
           }
-          st.ord1 = lo; st.v1 = r.getDouble(iLv)
+          t1 = tsOf(r, iLo); v1 = r.getDouble(iLv); has1 = true
         }
       }
-    }
-    val out = bySeries.iterator
-      .filter(_._2.ord2 != null)
-      .toArray
-      .sortBy(_._1)(Utf8Order)
-      .map { case (sk, st) =>
-        val delta = if (st.v1 < st.v2) st.v1 else st.v1 - st.v2
-        val dtNs = st.ord1._1 - st.ord2._1
+      if (!has2) Iterator.empty
+      else {
+        val delta = if (v1 < v2) v1 else v1 - v2
+        val dtNs = t1 - t2
         // zero-dt guard mirroring the raw operator (TsAnalytics.irate
-        // wraps the divisor in when(dt =!= 0L, ...) → null rate): a
-        // same-timestamp trailing pair must not emit ±Inf/NaN here
+        // wraps the divisor in when(dt =!= 0L, ...) → null rate)
         val rate: java.lang.Double =
           if (dtNs == 0L) null else delta * 1e9 / dtNs.toDouble
-        Row(st.metric, st.tags, sk, st.ord1._1, st.v1, delta, rate)
+        Iterator.single(Row.fromSeq(key ++ Seq[Any](t1, v1, delta, rate)))
       }
-    // LIMIT parity with the Spark path ([[TsdbEngine.analyze]]'s df.limit)
-    p.limit.fold(out)(n => out.take(n.toInt))
-  }
+    }
 
-  private def startAligned(p: QueryParams, interval: Long): Long =
-    p.startNs - java.lang.Math.floorMod(p.startNs, interval)
+  /** (aligned start, last target window) of a downsample at `interval`
+    * (aligned may precede startNs when interval > the rollup's). */
+  private def windowBounds(p: QueryParams, interval: Long): (Long, Long) = {
+    val endNs = p.endNs.get
+    val aligned = p.startNs - java.lang.Math.floorMod(p.startNs, interval)
+    (aligned, if (endNs <= aligned) aligned
+      else aligned + ((endNs - 1 - aligned) / interval) * interval)
+  }
 
   private[tsdb] def tagsMatch(r: Row, iTags: Int, p: QueryParams): Boolean =
     p.tags.isEmpty || {

@@ -398,24 +398,62 @@ object Rollup {
     * eligible only with `digests` (approximate contract — see the object
     * Scaladoc); everything else re-aggregates EXACTLY. */
   def supports(p: QueryParams, rollupIntervalNs: Long,
-      fields: Set[String], digests: Boolean = false): Boolean = {
-    val r = rollupIntervalNs
-    // a value predicate filters individual points — partials can't
-    // re-filter, so filtered queries always take the raw path; a
-    // prefix METRIC fans out past the per-metric rollup registration
-    p.valueFilters.isEmpty &&
-    !TagMatch.isPrefix(p.metric) &&
-    p.isDownsample &&
-      p.downsampleNs.exists(i => i > 0 && i % r == 0) &&
-      p.relativeNs.isEmpty &&
-      p.startNs % r == 0 &&
-      p.endNs.exists(e => e != 0L && (e + 1) % r == 0) &&
+      fields: Set[String], digests: Boolean = false): Boolean =
+    supportsAnalytic(p, rollupIntervalNs, _ => true, Nil,
+      Some(p.downsampleNs.getOrElse(0L))) &&
       p.aggs.nonEmpty &&
       p.aggs.forall(a =>
         (a.field == "*" || fields.contains(a.field)) &&
           (if (a.percentile.isDefined) digests && a.field != "*"
            else AggFunctions.named.contains(a.func)))
+
+  /** The one rollup eligibility predicate: true when a rollup of grain
+    * `grain` whose frame stores every column in `needs` (`has` answers
+    * for the frame) can answer `p` — no value filters (they filter
+    * individual points, partials can't re-filter), an exact metric (a
+    * prefix fans out past the per-metric registration), no RELATIVE/now
+    * resolution, an inclusive [start, end] range that is a union of whole
+    * rollup windows, and a target window (when the shape has one) that
+    * is a positive multiple of the grain, so every rollup window maps
+    * into exactly one target. Both serving tiers of every rollup-served
+    * ANALYZE verb call it through [[AnalyzeRoute.gate]]. */
+  def supportsAnalytic(p: QueryParams, grain: Long, has: String => Boolean,
+      needs: Seq[String], windowNs: Option[Long] = None): Boolean =
+    p.valueFilters.isEmpty &&
+      !TagMatch.isPrefix(p.metric) &&
+      p.relativeNs.isEmpty &&
+      p.startNs % grain == 0 &&
+      p.endNs.exists(e => e != 0L && (e + 1) % grain == 0) &&
+      windowNs.forall(w => w > 0 && w % grain == 0) &&
+      needs.forall(has)
+
+  /** `spec`'s routing-table gate against `rollup`'s columns. */
+  private def routable(p: QueryParams, grain: Long, rollup: DataFrame,
+      spec: AnalyzeSpec): Boolean =
+    AnalyzeRoutes.of(p, spec).exists(_.gate(grain, rollup.columns.contains))
+
+  /** `p`'s slice of a rollup frame: metric, tag predicates and the
+    * [startNs, endNs] window range (plus the `date` PARTITION column when
+    * the frame is the engine's date-partitioned layout, so whole date
+    * directories prune before any footer read). */
+  private def rangeSlice(rollup: DataFrame, p: QueryParams): DataFrame = {
+    val endNs = p.endNs.get
+    var df = rollup.filter(col("metric") === p.metric)
+    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
+    df = df.filter(col("window_start").between(p.startNs, endNs))
+    if (rollup.columns.contains("date"))
+      df = df.filter(col("date").between(
+        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
+    df
   }
+
+  /** Per series, the last numeric sample's value over all earlier
+    * windows — the boundary pair's left side. */
+  private def prevLast(field: String): Column =
+    last(col(s"${field}__last"), ignoreNulls = true).over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy(col("series_key")).orderBy(col("window_start"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1))
 
   /** Re-aggregation Column for one spec over the stored partials. */
   private def reAgg(s: AggSpec): Column = {
@@ -472,17 +510,10 @@ object Rollup {
       s"query not answerable from a $rollupIntervalNs ns rollup over " +
         s"fields ${coveredFields(rollup).mkString("{", ",", "}")}")
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
     // [startNs, endNs] is a union of whole rollup windows (checked above),
     // so window containment == the raw path's inclusive timestamp range
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    val (aligned, lastW) = QueryEngine.windowBounds(p, p.startNs, endNs)
-    val rolled = df
+    val (aligned, lastW) = QueryEngine.windowBounds(p, p.startNs, p.endNs.get)
+    val rolled = rangeSlice(rollup, p)
       .withColumn("target_window",
         col("window_start") - pmod(col("window_start"), lit(interval)))
       .filter(col("target_window") <= lastW)
@@ -552,17 +583,10 @@ object Rollup {
     require(p.fill == FillNone && !p.emitEmptyWindows && p.afterKey.isEmpty,
       "per-series shapes (FILL/EMIT EMPTY WINDOWS/AFTER) don't apply to GROUP BY TAGS")
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    val (_, lastW) = QueryEngine.windowBounds(p, p.startNs, endNs)
+    val (_, lastW) = QueryEngine.windowBounds(p, p.startNs, p.endNs.get)
     val tagCols = tagKeys.map(k => col("tags").getItem(k).as(s"tag_$k"))
     val keyRefs = tagKeys.map(k => col(s"tag_$k"))
-    val grouped = df
+    val grouped = rangeSlice(rollup, p)
       .withColumn("target_window",
         col("window_start") - pmod(col("window_start"), lit(interval)))
       .filter(col("target_window") <= lastW)
@@ -582,29 +606,19 @@ object Rollup {
   }
 
   /** True when a whole-range DELTA over `field` is answerable from this
-    * rollup frame: whole-window-aligned [start, end], no value filters
-    * (they re-filter points), exact metric, and the frame physically
-    * stores the in-window increase partial (frames built before the
-    * `__inc` column existed route raw). TAGGED composes — rollup rows
-    * carry tags. */
+    * rollup frame: the [[supportsAnalytic]] shape plus the stored
+    * in-window increase partial (frames built before the `__inc` column
+    * existed route raw). TAGGED composes — rollup rows carry tags. */
   def supportsDelta(p: QueryParams, rollupIntervalNs: Long,
-      rollup: DataFrame, field: String): Boolean = {
-    val r = rollupIntervalNs
-    p.valueFilters.isEmpty &&
-    !TagMatch.isPrefix(p.metric) &&
-    p.relativeNs.isEmpty &&
-    p.startNs % r == 0 &&
-    p.endNs.exists(e => e != 0L && (e + 1) % r == 0) &&
-    rollup.columns.contains(s"${field}__inc")
-  }
+      rollup: DataFrame, field: String): Boolean =
+    routable(p, rollupIntervalNs, rollup, AnalyzeDelta(field))
 
   /** True when a PREDICT over `field` is answerable from this rollup
     * frame — the [[supportsDelta]] gating plus the stored time-moment
     * partials. */
   def supportsPredict(p: QueryParams, rollupIntervalNs: Long,
       rollup: DataFrame, field: String): Boolean =
-    supportsDelta(p, rollupIntervalNs, rollup, field) &&
-      rollup.columns.contains(s"${field}__tsum")
+    routable(p, rollupIntervalNs, rollup, AnalyzePredict(field, 0L))
 
   /** Least-squares trend + horizon forecast
     * ([[TsAnalytics.predictLinear]]'s output shape) re-aggregated from
@@ -619,14 +633,7 @@ object Rollup {
     require(supportsPredict(p, rollupIntervalNs, rollup, field),
       s"PREDICT($field) not answerable from a $rollupIntervalNs ns rollup")
     require(horizonNs >= 0, "horizon must be non-negative")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    val g = df.groupBy(col("series_key"))
+    val g = rangeSlice(rollup, p).groupBy(col("series_key"))
       .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags"),
         sum(col(s"${field}__cnt")).as("n_points"),
         max(col(s"${field}__last_ord")).as("__lord"),
@@ -666,21 +673,7 @@ object Rollup {
       field: String): DataFrame = {
     require(supportsDelta(p, rollupIntervalNs, rollup, field),
       s"DELTA($field) not answerable from a $rollupIntervalNs ns rollup")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("window_start"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val prevLast = last(col(s"${field}__last"), ignoreNulls = true).over(w)
-    val bf = col(s"${field}__first")
-    val boundary = when(bf.isNotNull && prevLast.isNotNull,
-      when(bf < prevLast, bf).otherwise(bf - prevLast))
-    df.withColumn("__bd", boundary)
+    rangeSlice(rollup, p).withColumn("__bd", boundaryInc(field))
       .groupBy(col("series_key"))
       .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags"),
         sum(col(s"${field}__cnt")).as("n_points"),
@@ -699,20 +692,36 @@ object Rollup {
       .orderBy(col("series_key"))
   }
 
-  /** True when RESETS/CHANGES over `field` are answerable from this
-    * rollup frame: the [[supportsDelta]] gating with the stored
-    * transition-count partials instead of `__inc` (frames built before
-    * the `__resets` column existed route raw). */
-  def supportsTransitions(p: QueryParams, rollupIntervalNs: Long,
-      rollup: DataFrame, field: String): Boolean = {
-    val r = rollupIntervalNs
-    p.valueFilters.isEmpty &&
-    !TagMatch.isPrefix(p.metric) &&
-    p.relativeNs.isEmpty &&
-    p.startNs % r == 0 &&
-    p.endNs.exists(e => e != 0L && (e + 1) % r == 0) &&
-    rollup.columns.contains(s"${field}__resets")
+  /** The boundary pair's reset-aware increase: previous non-empty
+    * window's last value → this window's first (null when either side is
+    * missing). */
+  private def boundaryInc(field: String): Column = {
+    val bf = col(s"${field}__first"); val pl = prevLast(field)
+    when(bf.isNotNull && pl.isNotNull, when(bf < pl, bf).otherwise(bf - pl))
   }
+
+  /** The boundary pair's reset and change indicators (`__br`, `__bc`). */
+  private def withBoundaryTransitions(df: DataFrame, field: String): DataFrame = {
+    val bf = col(s"${field}__first"); val pl = prevLast(field)
+    val pairUp = bf.isNotNull && pl.isNotNull
+    df.withColumn("__br", when(pairUp, when(bf < pl, lit(1L)).otherwise(lit(0L))))
+      .withColumn("__bc", when(pairUp, when(bf =!= pl, lit(1L)).otherwise(lit(0L))))
+  }
+
+  /** Stored in-window counts plus the boundary indicators. */
+  private def transitionCounts(field: String): Seq[Column] = Seq(
+    (coalesce(sum(col(s"${field}__resets")), lit(0L)) +
+      coalesce(sum(col("__br")), lit(0L))).as("resets"),
+    (coalesce(sum(col(s"${field}__changes")), lit(0L)) +
+      coalesce(sum(col("__bc")), lit(0L))).as("changes"))
+
+  /** True when RESETS/CHANGES over `field` are answerable from this
+    * rollup frame: the [[supportsAnalytic]] shape with the stored
+    * transition-count partials (frames built before the `__resets`
+    * column existed route raw). */
+  def supportsTransitions(p: QueryParams, rollupIntervalNs: Long,
+      rollup: DataFrame, field: String): Boolean =
+    routable(p, rollupIntervalNs, rollup, AnalyzeResets(field))
 
   /** Counter-transition counts ([[TsAnalytics.transitions]]'s output
     * shape) re-aggregated from rollup partials. The decomposition is the
@@ -728,30 +737,10 @@ object Rollup {
     require(supportsTransitions(p, rollupIntervalNs, rollup, field),
       s"RESETS/CHANGES($field) not answerable from a " +
         s"$rollupIntervalNs ns rollup")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("window_start"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val prevLast = last(col(s"${field}__last"), ignoreNulls = true).over(w)
-    val bf = col(s"${field}__first")
-    val pairUp = bf.isNotNull && prevLast.isNotNull
-    df.withColumn("__br",
-        when(pairUp, when(bf < prevLast, lit(1L)).otherwise(lit(0L))))
-      .withColumn("__bc",
-        when(pairUp, when(bf =!= prevLast, lit(1L)).otherwise(lit(0L))))
+    withBoundaryTransitions(rangeSlice(rollup, p), field)
       .groupBy(col("series_key"))
-      .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags"),
-        sum(col(s"${field}__cnt")).as("n_points"),
-        (coalesce(sum(col(s"${field}__resets")), lit(0L)) +
-          coalesce(sum(col("__br")), lit(0L))).as("resets"),
-        (coalesce(sum(col(s"${field}__changes")), lit(0L)) +
-          coalesce(sum(col("__bc")), lit(0L))).as("changes"))
+      .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags") +:
+        sum(col(s"${field}__cnt")).as("n_points") +: transitionCounts(field): _*)
       .filter(col("n_points") > 0) // like the raw path: null-only series emit nothing
       .select(col("metric"), col("tags"), col("series_key"), col("n_points"),
         col("resets"), col("changes"))
@@ -764,8 +753,7 @@ object Rollup {
     * multiple of the grain. */
   def supportsTransitionsBy(p: QueryParams, rollupIntervalNs: Long,
       rollup: DataFrame, field: String, windowNs: Long): Boolean =
-    supportsTransitions(p, rollupIntervalNs, rollup, field) &&
-      windowNs > 0 && windowNs % rollupIntervalNs == 0
+    routable(p, rollupIntervalNs, rollup, AnalyzeResetsBy(field, windowNs))
 
   /** Windowed transition counts ([[TsAnalytics.windowedTransitions]]'s
     * output shape) re-aggregated from rollup partials — the
@@ -780,33 +768,13 @@ object Rollup {
     require(supportsTransitionsBy(p, rollupIntervalNs, rollup, field, windowNs),
       s"RESETS/CHANGES($field) BY $windowNs not answerable from a " +
         s"$rollupIntervalNs ns rollup")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
     // boundary lag runs across the WHOLE range ([[runDeltaBy]] note)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("window_start"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val prevLast = last(col(s"${field}__last"), ignoreNulls = true).over(w)
-    val bf = col(s"${field}__first")
-    val pairUp = bf.isNotNull && prevLast.isNotNull
-    df.withColumn("__br",
-        when(pairUp, when(bf < prevLast, lit(1L)).otherwise(lit(0L))))
-      .withColumn("__bc",
-        when(pairUp, when(bf =!= prevLast, lit(1L)).otherwise(lit(0L))))
+    withBoundaryTransitions(rangeSlice(rollup, p), field)
       .withColumn("target_window",
         col("window_start") - pmod(col("window_start"), lit(windowNs)))
       .groupBy(col("series_key"), col("target_window"))
-      .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags"),
-        sum(col(s"${field}__cnt")).as("n_points"),
-        (coalesce(sum(col(s"${field}__resets")), lit(0L)) +
-          coalesce(sum(col("__br")), lit(0L))).as("resets"),
-        (coalesce(sum(col(s"${field}__changes")), lit(0L)) +
-          coalesce(sum(col("__bc")), lit(0L))).as("changes"))
+      .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags") +:
+        sum(col(s"${field}__cnt")).as("n_points") +: transitionCounts(field): _*)
       .filter(col("n_points") > 0) // target windows with no numeric samples
       .select(col("metric"), col("tags"), col("series_key"),
         col("target_window").as("window_start"), col("n_points"),
@@ -821,8 +789,7 @@ object Rollup {
     * per-window decomposition is exact). */
   def supportsDeltaBy(p: QueryParams, rollupIntervalNs: Long,
       rollup: DataFrame, field: String, windowNs: Long): Boolean =
-    supportsDelta(p, rollupIntervalNs, rollup, field) &&
-      windowNs > 0 && windowNs % rollupIntervalNs == 0
+    routable(p, rollupIntervalNs, rollup, AnalyzeDeltaBy(field, windowNs))
 
   /** Windowed DELTA/INCREASE ([[TsAnalytics.windowedDelta]]'s output
     * shape) re-aggregated from rollup partials. Same decomposition as
@@ -840,24 +807,10 @@ object Rollup {
     require(supportsDeltaBy(p, rollupIntervalNs, rollup, field, windowNs),
       s"DELTA($field) BY $windowNs not answerable from a " +
         s"$rollupIntervalNs ns rollup")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
     // boundary lag runs across the WHOLE range (continuous-counter
     // semantics — the pair crossing a target boundary lands in the later
     // target), not per target window
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("series_key")).orderBy(col("window_start"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val prevLast = last(col(s"${field}__last"), ignoreNulls = true).over(w)
-    val bf = col(s"${field}__first")
-    val boundary = when(bf.isNotNull && prevLast.isNotNull,
-      when(bf < prevLast, bf).otherwise(bf - prevLast))
-    df.withColumn("__bd", boundary)
+    rangeSlice(rollup, p).withColumn("__bd", boundaryInc(field))
       .withColumn("target_window",
         col("window_start") - pmod(col("window_start"), lit(windowNs)))
       .groupBy(col("series_key"), col("target_window"))
@@ -881,9 +834,8 @@ object Rollup {
     * in-window LOCF integral partial. */
   def supportsTwa(p: QueryParams, rollupIntervalNs: Long,
       rollup: DataFrame, field: String): Boolean =
-    supportsDelta(p, rollupIntervalNs, rollup, field) &&
-      p.downsampleNs.exists(i => i > 0 && i % rollupIntervalNs == 0) &&
-      rollup.columns.contains(s"${field}__area")
+    routable(p, rollupIntervalNs, rollup,
+      AnalyzeTwa(field, p.downsampleNs.getOrElse(0L)))
 
   /** Time-weighted average ([[TsAnalytics.timeWeightedAvg]]'s output
     * shape) re-aggregated from rollup partials — |series|×windows rows
@@ -907,16 +859,9 @@ object Rollup {
     require(supportsTwa(p, rollupIntervalNs, rollup, field),
       s"TWA($field) not answerable from a $rollupIntervalNs ns rollup")
     val interval = p.downsampleNs.get
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
     // drop windows with no numeric samples BEFORE the lead so `next`
     // skips them (the raw path's lead is over numeric samples only)
-    df = df.filter(col(s"${field}__cnt") > 0)
+    val df = rangeSlice(rollup, p).filter(col(s"${field}__cnt") > 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("series_key")).orderBy(col("window_start"))
     val nextFirst = lead(col(s"${field}__first_ord").getField("timestamp"), 1).over(w)
@@ -943,41 +888,14 @@ object Rollup {
       .orderBy(col("series_key"), col("window_start"))
   }
 
-  /** Pure (job-free) gate for a windowed smoothing query: aligned bounds,
-    * grain divisibility, and the frame physically carrying the spec's
-    * stored fold state. The RANGE-START probe ([[supportsSmoothBy]]) is
-    * separate because it runs a (metadata-sized) job. */
-  def supportsSmoothShape(p: QueryParams, rollupIntervalNs: Long,
-      rollup: DataFrame, s: SmoothSpec, windowNs: Long): Boolean = {
-    val r = rollupIntervalNs
-    p.valueFilters.isEmpty &&
-    !TagMatch.isPrefix(p.metric) &&
-    p.relativeNs.isEmpty &&
-    p.startNs % r == 0 &&
-    p.endNs.exists(e => e != 0L && (e + 1) % r == 0) &&
-    windowNs > 0 && windowNs % r == 0 &&
-    rollup.columns.contains(smoothStateCol(s)) &&
-    rollup.columns.contains(s"${s.field}__cnt")
-  }
-
-  /** True when `ANALYZE EWMA/HOLT(f, …) BY windowNs` is answerable from
-    * this rollup frame. Beyond [[supportsSmoothShape]], a recurrence
-    * adds a condition the range-local analytics don't have: the stored
-    * state folds from each series' FIRST sample, so the query start must
-    * precede every in-scope sample (a mid-stream start would make the
-    * raw twin re-seed and the states diverge). With grain-aligned
-    * startNs that reduces to "no matched non-empty rollup window starts
-    * before startNs" — one limit-1 probe over the cached frame. */
-  def supportsSmoothBy(p: QueryParams, rollupIntervalNs: Long,
-      rollup: DataFrame, s: SmoothSpec, windowNs: Long): Boolean =
-    supportsSmoothShape(p, rollupIntervalNs, rollup, s, windowNs) &&
-      smoothRangeStartProbe(rollup, p, s)
-
-  /** The range-start condition alone (one limit-1 job): no matched
-    * non-empty window before startNs. [[TsdbEngine]] short-circuits it
-    * with a cached per-(metric, epoch) min-window bound — any frame
-    * whose FIRST stored window is ≥ startNs passes for every tag
-    * subset without a job (the common "from the beginning" dashboard). */
+  /** The range-start condition of a windowed smoothing route (one
+    * limit-1 job): no matched non-empty window before startNs. The
+    * stored state folds from each series' FIRST sample, so a mid-stream
+    * start would make the raw twin re-seed and the states diverge.
+    * [[TsdbEngine]] short-circuits it with a cached per-(metric, epoch)
+    * min-window bound — any frame whose FIRST stored window is ≥ startNs
+    * passes for every tag subset without a job (the common "from the
+    * beginning" dashboard). */
   def smoothRangeStartProbe(rollup: DataFrame, p: QueryParams,
       s: SmoothSpec): Boolean = {
     var df = rollup.filter(col("metric") === p.metric)
@@ -993,23 +911,15 @@ object Rollup {
     * window (the fold is a running prefix — sampling it at a coarser
     * boundary IS the finer sample at that boundary), so any `windowNs`
     * that is a multiple of the grain serves BIT-identically to the raw
-    * operator. Caller must have checked [[supportsSmoothBy]] (the
-    * range-start probe is not re-run here — it costs a job). */
+    * operator. Caller must have checked [[smoothRangeStartProbe]] (it
+    * costs a job, so it is not re-run here). */
   def runSmoothBy(rollup: DataFrame, rollupIntervalNs: Long, p: QueryParams,
       s: SmoothSpec, windowNs: Long): DataFrame = {
-    require(supportsSmoothShape(p, rollupIntervalNs, rollup, s, windowNs),
+    require(routable(p, rollupIntervalNs, rollup, AnalyzeRoutes.smoothBy(s, windowNs)),
       s"${s.kind.toUpperCase}(${s.field}) BY $windowNs not answerable " +
         s"from a $rollupIntervalNs ns rollup")
-    val endNs = p.endNs.get
-    var df = rollup.filter(col("metric") === p.metric)
-    p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    df = df.filter(col("window_start").between(p.startNs, endNs))
-    if (rollup.columns.contains("date"))
-      df = df.filter(col("date").between(
-        TsdbEngine.dayStr(p.startNs), TsdbEngine.dayStr(endNs)))
-    df = df.filter(col(s"${s.field}__cnt") > 0)
     val lastOrd = col(s"${s.field}__last_ord")
-    val grouped = df
+    val grouped = rangeSlice(rollup, p).filter(col(s"${s.field}__cnt") > 0)
       .withColumn("target_window",
         col("window_start") - pmod(col("window_start"), lit(windowNs)))
       .groupBy(col("series_key"), col("target_window"))

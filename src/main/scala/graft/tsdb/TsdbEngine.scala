@@ -899,86 +899,12 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       case AnalyzeRate(f) =>
         TsAnalytics.rate(pts, params, field = f, tombstones = tombs,
           splitNs = splitNs)
-      case AnalyzeDelta(f) =>
-        // rollup-routed when a registered rollup covers the field with
-        // the in-window increase partial: |series|×windows partial rows
-        // instead of raw points ([[Rollup.runDelta]]'s exact
-        // decomposition; tombstones are immaterial — rollup views are
-        // built over the merged, tombstone-applied frame)
-        val routed = Option(rollupSpecs.get(params.metric))
-          .filter(spec => spec.fields.contains(f))
-          .map(spec => (spec, rollupView(params.metric, spec)))
-          .filter { case (spec, view) =>
-            Rollup.supportsDelta(params, spec.intervalNs, view, f) }
-          .map { case (spec, view) =>
-            lastServePath = "rollup-delta"
-            Rollup.runDelta(view, spec.intervalNs, params, f)
-          }
-        routed.getOrElse {
-          lastServePath = "analyze-raw"
-          TsAnalytics.rangeDelta(pts, params, field = f, tombstones = tombs,
-            splitNs = splitNs)
-        }
-      case AnalyzeDeltaBy(f, w) =>
-        deltaByPath(pts, tombs, params, f, w, splitNs)
-      case AnalyzeRateBy(f, w) =>
-        // per-window average per-second rate: the windowed increase over
-        // the window duration — identical routing (same partials), one
-        // projection on top
-        deltaByPath(pts, tombs, params, f, w, splitNs)
-          .select(col("metric"), col("tags"), col("series_key"),
-            col("window_start"), col("n_points"),
-            (col("increase") * lit(1e9) / lit(w.toDouble))
-              .as("rate_per_sec"))
-      case AnalyzeIrate(f) =>
-        TsAnalytics.irate(pts, params, field = f, tombstones = tombs,
-          splitNs = splitNs)
-      case AnalyzeResets(f) =>
-        transitionsPath(pts, tombs, params, f, splitNs, "resets")
-      case AnalyzeChanges(f) =>
-        transitionsPath(pts, tombs, params, f, splitNs, "changes")
-      case AnalyzeResetsBy(f, w) =>
-        transitionsByPath(pts, tombs, params, f, w, splitNs, "resets")
-      case AnalyzeChangesBy(f, w) =>
-        transitionsByPath(pts, tombs, params, f, w, splitNs, "changes")
-      case AnalyzePredict(f, h) =>
-        predictPath(pts, tombs, params, f, h, splitNs)
-      case AnalyzeDeriv(f) =>
-        // PromQL deriv(): the PREDICT trend fit without the forecast —
-        // identical routing (the moments don't depend on the horizon),
-        // projected to the slope
-        predictPath(pts, tombs, params, f, 0L, splitNs)
-          .select(col("metric"), col("tags"), col("series_key"),
-            col("n_points"), col("last_ts"), col("slope_per_sec"))
       case AnalyzeEwma(f, a) =>
         TsAnalytics.ewmaSmooth(pts, params, a, field = f, tombstones = tombs,
           splitNs = splitNs)
-      case AnalyzeEwmaBy(f, a, w) =>
-        smoothByPath(pts, tombs, params, SmoothSpec(f, "ewma", a), w, splitNs)
       case AnalyzeHolt(f, a, b) =>
         TsAnalytics.holtSmooth(pts, params, a, b, field = f,
           tombstones = tombs, splitNs = splitNs)
-      case AnalyzeHoltBy(f, a, b, w) =>
-        smoothByPath(pts, tombs, params, SmoothSpec(f, "holt", a, b), w, splitNs)
-      case AnalyzeTwa(f, iv) =>
-        // rollup-routed when the frame stores the LOCF integral partial
-        // (`__area`) and the TWA interval is a multiple of the grain
-        // ([[Rollup.runTwa]])
-        val pTwa = params.copy(downsampleNs = Some(iv))
-        val routed = Option(rollupSpecs.get(params.metric))
-          .filter(spec => spec.fields.contains(f))
-          .map(spec => (spec, rollupView(params.metric, spec)))
-          .filter { case (spec, view) =>
-            Rollup.supportsTwa(pTwa, spec.intervalNs, view, f) }
-          .map { case (spec, view) =>
-            lastServePath = "rollup-twa"
-            Rollup.runTwa(view, spec.intervalNs, pTwa, f)
-          }
-        routed.getOrElse {
-          lastServePath = "analyze-raw"
-          TsAnalytics.timeWeightedAvg(pts, pTwa, field = f,
-            tombstones = tombs, splitNs = splitNs)
-        }
       case AnalyzeCumsum(f) =>
         TsAnalytics.runningAggregates(pts, params, field = f,
           tombstones = tombs, splitNs = splitNs)
@@ -1012,6 +938,8 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       case AnalyzeTopK(k, by, keys, asc) =>
         TsAnalytics.topKGroups(pts, params, keys, k, by, tombstones = tombs,
           ascending = asc)
+      case _ => analyzeRouted(AnalyzeRoutes.of(params, spec).get, pts, tombs,
+        splitNs)
     }
     // keyset resume (round 13): per-series/windowed analytics order by
     // (series_key[, window_start|timestamp]) — AFTER filters strictly
@@ -1036,132 +964,34 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     params.limit.fold(paged)(n => paged.limit(n.toInt))
   }
 
-  /** ANALYZE RESETS/CHANGES plan: rollup-routed when a registered rollup
-    * stores the transition-count partials ([[Rollup.runTransitions]] —
-    * exact long counts, so the route is BIT-identical to raw, not just
-    * value-equal), raw lag plan otherwise; projected to the verb's
-    * column. */
-  private def transitionsPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, splitNs: Option[Long],
-      keep: String): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsTransitions(params, spec.intervalNs, view, f) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-transitions"
-        Rollup.runTransitions(view, spec.intervalNs, params, f)
+  /** A rollup-routed ANALYZE on the Spark path ([[AnalyzeRoutes]]): the
+    * registered rollup's partial plan when the route covers the
+    * registration and its gate passes over the persisted frame's
+    * columns, the raw analytic otherwise; projected to the verb's
+    * columns. Tombstones are immaterial to the route — rollup views are
+    * built over the merged, tombstone-applied frame. A recurrence's
+    * range-start condition reads the cached per-(metric, epoch) min
+    * window bound, which answers the common from-the-start dashboard
+    * with NO job; only a mid-range start pays the limit-1 probe. */
+  private def analyzeRouted(rt: AnalyzeRoute, pts: DataFrame,
+      tombs: Seq[Tombstone], splitNs: Option[Long]): DataFrame = {
+    val p = rt.p
+    val reg = rollupSpecs.get(p.metric)
+    val routed = rt.spark
+      .filter(_ => reg != null && rt.covers(reg) && rt.gate(reg.intervalNs, _ => true))
+      .flatMap { run =>
+        val view = rollupView(p.metric, reg)
+        if (rt.gate(reg.intervalNs, view.columns.contains) && rt.smooth.forall(s =>
+            rollupMinWindowStart(p.metric, reg, view) >= p.startNs ||
+              Rollup.smoothRangeStartProbe(view, p, s))) {
+          lastServePath = rt.sparkPath
+          Some(run(view, reg.intervalNs))
+        } else None
       }
-    routed.getOrElse {
+    rt.project(routed.getOrElse {
       lastServePath = "analyze-raw"
-      TsAnalytics.transitions(pts, params, field = f, tombstones = tombs,
-        splitNs = splitNs)
-    }.select(col("metric"), col("tags"), col("series_key"),
-      col("n_points"), col(keep))
-  }
-
-  /** WINDOWED delta (`DELTA BY` / `RATE BY`): rollup-routed like
-    * whole-range DELTA when the target window is a multiple of the
-    * grain — the same in-window `__inc` + boundary decomposition,
-    * grouped into target windows ([[Rollup.runDeltaBy]]). */
-  private def deltaByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, w: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsDeltaBy(params, spec.intervalNs, view, f, w) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-delta-by"
-        Rollup.runDeltaBy(view, spec.intervalNs, params, f, w)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.windowedDelta(pts, params, w, field = f,
-        tombstones = tombs, splitNs = splitNs)
-    }
-  }
-
-  /** EWMA/HOLT … BY: served from a registered rollup's stored fold
-    * states when the registration carries the EXACT same [[SmoothSpec]]
-    * (field, kind, α, β ride the registration — a different α is a
-    * different fold) and [[Rollup.supportsSmoothBy]] passes (aligned
-    * bounds + the range-start probe); the raw windowed fold otherwise.
-    * The routed read is BIT-identical ([[SmoothSpec]] contract). */
-  private def smoothByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, s: SmoothSpec, w: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.smooth.contains(s))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        // range-start condition: the cached per-(metric, epoch) min
-        // window bound answers the common from-the-start dashboard with
-        // NO job; only a mid-range start pays the limit-1 probe
-        Rollup.supportsSmoothShape(params, spec.intervalNs, view, s, w) &&
-          (rollupMinWindowStart(params.metric, spec, view) >= params.startNs ||
-            Rollup.smoothRangeStartProbe(view, params, s)) }
-      .map { case (spec, view) =>
-        lastServePath = s"rollup-${s.kind}"
-        Rollup.runSmoothBy(view, spec.intervalNs, params, s, w)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      if (s.kind == "ewma")
-        TsAnalytics.ewmaSmoothBy(pts, params, s.alpha, w, field = s.field,
-          tombstones = tombs, splitNs = splitNs)
-      else
-        TsAnalytics.holtSmoothBy(pts, params, s.alpha, s.beta, w,
-          field = s.field, tombstones = tombs, splitNs = splitNs)
-    }
-  }
-
-  /** PREDICT/DERIV trend fit: rollup-routed like DELTA — the stored time
-    * moments shift to the query anchor and merge as plain sums
-    * ([[Rollup.runPredict]]) — raw moment plan otherwise. */
-  private def predictPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, h: Long,
-      splitNs: Option[Long]): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsPredict(params, spec.intervalNs, view, f) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-predict"
-        Rollup.runPredict(view, spec.intervalNs, params, f, h)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.predictLinear(pts, params, h, field = f,
-        tombstones = tombs, splitNs = splitNs)
-    }
-  }
-
-  /** WINDOWED transition counts (`ANALYZE RESETS/CHANGES(f) BY <dur>`):
-    * rollup-routed like [[transitionsPath]] when the target window is a
-    * multiple of the grain ([[Rollup.runTransitionsBy]], exact long
-    * counts), raw windowed lag plan otherwise. */
-  private def transitionsByPath(pts: DataFrame, tombs: Seq[Tombstone],
-      params: QueryParams, f: String, windowNs: Long, splitNs: Option[Long],
-      keep: String): DataFrame = {
-    val routed = Option(rollupSpecs.get(params.metric))
-      .filter(spec => spec.fields.contains(f))
-      .map(spec => (spec, rollupView(params.metric, spec)))
-      .filter { case (spec, view) =>
-        Rollup.supportsTransitionsBy(params, spec.intervalNs, view, f, windowNs) }
-      .map { case (spec, view) =>
-        lastServePath = "rollup-transitions-by"
-        Rollup.runTransitionsBy(view, spec.intervalNs, params, f, windowNs)
-      }
-    routed.getOrElse {
-      lastServePath = "analyze-raw"
-      TsAnalytics.windowedTransitions(pts, params, windowNs, field = f,
-        tombstones = tombs, splitNs = splitNs)
-    }.select(col("metric"), col("tags"), col("series_key"),
-      col("window_start"), col("n_points"), col(keep))
+      rt.raw(pts, tombs, splitNs)
+    })
   }
 
   /** ANALYZE through the serving tier: the protocol entry for the
@@ -1226,93 +1056,9 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         lastServePath = "analyze-cache"
         (rows, false, schema)
       case None =>
-        // driver-resident tier for DELTA: fold the resident rollup
-        // partials in pure Scala ([[LocalRollup.runDelta]]) — no job, no
-        // planning floor, one output row per series (always under
-        // budget)
-        val local = spec match {
-          case AnalyzeDelta(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-delta") {
-              (slice, sch) => (LocalRollup.runDelta(slice, sch, p, f),
-                LocalRollup.outputSchemaDelta)
-            }
-          case AnalyzePredict(f, h) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-predict") {
-              (slice, sch) => (LocalRollup.runPredict(slice, sch, p, f, h),
-                LocalRollup.outputSchemaPredict)
-            }
-          case AnalyzeDeriv(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-deriv") {
-              (slice, sch) =>
-                (LocalRollup.runPredict(slice, sch, p, f, 0L)
-                  .map(r => Row(r(0), r(1), r(2), r(3), r(4), r(5))),
-                  LocalRollup.outputSchemaDeriv)
-            }
-          case AnalyzeIrate(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-irate",
-              extraCols = Seq(s"${f}__plast")) {
-              (slice, sch) => (LocalRollup.runIrate(slice, sch, p, f),
-                LocalRollup.outputSchemaIrate)
-            }
-          case AnalyzeResets(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-resets",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes")) {
-              (slice, sch) =>
-                (LocalRollup.runTransitions(slice, sch, p, f, "resets"),
-                  LocalRollup.outputSchemaTransitions("resets"))
-            }
-          case AnalyzeChanges(f) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-changes",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes")) {
-              (slice, sch) =>
-                (LocalRollup.runTransitions(slice, sch, p, f, "changes"),
-                  LocalRollup.outputSchemaTransitions("changes"))
-            }
-          case AnalyzeDeltaBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-delta-by",
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) => (LocalRollup.runDeltaBy(slice, sch, p, f, w),
-                LocalRollup.outputSchemaDeltaBy)
-            }
-          case AnalyzeRateBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-rate-by",
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runDeltaBy(slice, sch, p, f, w).map(r =>
-                  Row(r(0), r(1), r(2), r(3), r(4),
-                    r.getDouble(6) * 1e9 / w.toDouble)),
-                  LocalRollup.outputSchemaRateBy)
-            }
-          case AnalyzeResetsBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-resets-by",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes"),
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "resets"),
-                  LocalRollup.outputSchemaTransitionsBy("resets"))
-            }
-          case AnalyzeChangesBy(f, w) =>
-            serveLocalRollupAnalytic(p, f, "local-rollup-changes-by",
-              extraCols = Seq(s"${f}__resets", s"${f}__changes"),
-              alignGate = grain => w > 0 && w % grain == 0) {
-              (slice, sch) =>
-                (LocalRollup.runTransitionsBy(slice, sch, p, f, w, "changes"),
-                  LocalRollup.outputSchemaTransitionsBy("changes"))
-            }
-          case AnalyzeTwa(f, iv) =>
-            val pTwa = p.copy(downsampleNs = Some(iv))
-            serveLocalRollupAnalytic(pTwa, f, "local-rollup-twa",
-              extraCols = Seq(s"${f}__area"),
-              alignGate = grain => iv > 0 && iv % grain == 0) {
-              (slice, sch) => (LocalRollup.runTwa(slice, sch, pTwa, f),
-                LocalRollup.outputSchemaTwa)
-            }
-          case AnalyzeEwmaBy(f, a, w) =>
-            serveLocalSmooth(p, SmoothSpec(f, "ewma", a), w)
-          case AnalyzeHoltBy(f, a, b, w) =>
-            serveLocalSmooth(p, SmoothSpec(f, "holt", a, b), w)
-          case _ => None
-        }
+        // driver-resident rollup tier: the routed verb's fold over the
+        // resident partials — no job, no planning floor
+        val local = AnalyzeRoutes.of(p, spec).flatMap(serveLocalAnalytic)
         local match {
           case Some((rows, sch)) =>
             if (cacheable) resultCache.putByKey(key, epoch, rows, sch)
@@ -1338,85 +1084,53 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     }
   }
 
-  /** Driver-resident whole-range-analytic serving (DELTA/PREDICT):
-    * slice the resident partial rows to the window range and fold in
-    * pure Scala when a registered rollup covers the field and the frame
-    * carries the needed partial columns (`__inc`; `__tsum` family —
-    * both ship together, schema-checked by the first). */
-  private def serveLocalRollupAnalytic(p: QueryParams, field: String,
-      path: String, extraCols: Seq[String] = Nil,
-      alignGate: Long => Boolean = _ => true)(
-      fold: (Array[Row], org.apache.spark.sql.types.StructType) =>
-        (Array[Row], org.apache.spark.sql.types.StructType)):
+  /** Driver-resident serving of a rollup-routed ANALYZE: the route's own
+    * gate over the resident frame's columns, then its fold over the
+    * [startNs, endNs] slice. A recurrence additionally needs no matched
+    * non-empty window before startNs (the stored state is a prefix
+    * fold); the check walks the resident rows BEFORE the slice, a driver
+    * array walk, not a job. */
+  private def serveLocalAnalytic(rt: AnalyzeRoute):
       Option[(Array[Row], org.apache.spark.sql.types.StructType)] = {
-    val spec = rollupSpecs.get(p.metric)
+    val p = rt.p
+    val reg = rollupSpecs.get(p.metric)
     // afterKey: a cursor resume takes the Spark path, whose generic
     // keyset filter + limit handle it ([[analyze]]) — the local folds
     // apply LIMIT internally, which would otherwise re-serve page 1
-    if (spec == null || !spec.fields.contains(field) ||
-        p.afterKey.isDefined ||
-        p.valueFilters.nonEmpty || TagMatch.isPrefix(p.metric) ||
-        p.relativeNs.isDefined || p.startNs % spec.intervalNs != 0 ||
-        !p.endNs.exists(e => e != 0L && (e + 1) % spec.intervalNs == 0) ||
-        !alignGate(spec.intervalNs))
-      None
-    else localRollupRows(p.metric, spec).flatMap { case (rows, ws, sch) =>
-      if (!sch.fieldNames.contains(s"${field}__inc") ||
-          !sch.fieldNames.contains(s"${field}__tsum") ||
-          !extraCols.forall(sch.fieldNames.contains)) None
+    if (reg == null || !rt.covers(reg) || p.afterKey.isDefined ||
+        !rt.gate(reg.intervalNs, _ => true)) None
+    else localRollupRows(p.metric, reg).flatMap { case (rows, ws, sch) =>
+      val lo = lowerBound(ws, p.startNs)
+      if (!rt.gate(reg.intervalNs, sch.fieldNames.contains) ||
+          rt.smooth.exists(s => residentBefore(rows, lo, sch, p, s.field))) None
       else {
-        val lo = lowerBound(ws, p.startNs)
-        val hi = math.max(lo, upperBound(ws, p.endNs.get))
-        val slice = java.util.Arrays.copyOfRange(
-          rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-        lastServePath = path
-        Some(fold(slice, sch))
+        lastServePath = rt.localPath
+        Some((rt.local(residentSlice(rows, ws, p), sch), rt.schema))
       }
     }
   }
 
-  /** Driver-resident EWMA/HOLT … BY: the [[serveLocalRollupAnalytic]]
-    * analog for the smoothing recurrences — eligible only when the
-    * registration carries the EXACT [[SmoothSpec]], the bounds align,
-    * the window is a grain multiple, AND no matched non-empty window
-    * precedes startNs (the stored state is a prefix fold; the prefix
-    * check scans the resident rows BEFORE the range slice, so it costs
-    * a driver array walk, not a job). */
-  private def serveLocalSmooth(p: QueryParams, s: SmoothSpec, w: Long):
-      Option[(Array[Row], org.apache.spark.sql.types.StructType)] = {
-    val spec = rollupSpecs.get(p.metric)
-    if (spec == null || !spec.smooth.contains(s) ||
-        p.afterKey.isDefined || // see serveLocalRollupAnalytic
-        p.valueFilters.nonEmpty || TagMatch.isPrefix(p.metric) ||
-        p.relativeNs.isDefined || p.startNs % spec.intervalNs != 0 ||
-        !p.endNs.exists(e => e != 0L && (e + 1) % spec.intervalNs == 0) ||
-        w <= 0 || w % spec.intervalNs != 0)
-      None
-    else localRollupRows(p.metric, spec).flatMap { case (rows, ws, sch) =>
-      if (!sch.fieldNames.contains(Rollup.smoothStateCol(s))) None
-      else {
-        val lo = lowerBound(ws, p.startNs)
-        val hi = math.max(lo, upperBound(ws, p.endNs.get))
-        val iMetric = sch.fieldIndex("metric")
-        val iTags = sch.fieldIndex("tags")
-        val iCnt = sch.fieldIndex(s"${s.field}__cnt")
-        var i = 0; var blocked = false
-        while (i < lo && !blocked) {
-          val r = rows(i)
-          if (r.getString(iMetric) == p.metric && r.getLong(iCnt) > 0 &&
-              LocalRollup.tagsMatch(r, iTags, p)) blocked = true
-          i += 1
-        }
-        if (blocked) None
-        else {
-          val slice = java.util.Arrays.copyOfRange(
-            rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-          lastServePath = s"local-rollup-${s.kind}"
-          Some((LocalRollup.runSmoothBy(slice, sch, p, s, w),
-            LocalRollup.outputSchemaSmooth(s.kind)))
-        }
-      }
-    }
+  /** True when a resident row before index `lo` matches `p` and holds a
+    * numeric sample of `field`. */
+  private def residentBefore(rows: Array[Row], lo: Int,
+      sch: org.apache.spark.sql.types.StructType, p: QueryParams,
+      field: String): Boolean = {
+    val iMetric = sch.fieldIndex("metric")
+    val iTags = sch.fieldIndex("tags")
+    val iCnt = sch.fieldIndex(s"${field}__cnt")
+    rows.iterator.take(lo).exists(r => r.getString(iMetric) == p.metric &&
+      r.getLong(iCnt) > 0 && LocalRollup.tagsMatch(r, iTags, p))
+  }
+
+  /** The binary-searched [startNs, endNs] window slice of resident rollup
+    * rows (sorted by window_start); the folds re-apply the same bounds,
+    * so the slice is purely a scan reduction. */
+  private def residentSlice(rows: Array[Row], ws: Array[Long],
+      p: QueryParams): Array[Row] = {
+    val lo = lowerBound(ws, p.startNs)
+    val hi = math.max(lo, upperBound(ws, p.endNs.get))
+    java.util.Arrays.copyOfRange(
+      rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
   }
 
   /** Paired (tag_value, bucket, va, vb, n_a, n_b) frame for the
@@ -1492,12 +1206,9 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     val local: Option[TsdbEngine.Served] =
       if (spec != null && byTagsRollupEligible(params, spec))
         localRollupRows(params.metric, spec).map { case (rows, ws, sch) =>
-          val lo = lowerBound(ws, params.startNs)
-          val hi = math.max(lo, upperBound(ws, params.endNs.get))
-          val slice = java.util.Arrays.copyOfRange(
-            rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
           lastServePath = "local-rollup-tags"
-          Left((LocalRollup.runByTags(slice, sch, params, spec.intervalNs, tagKeys),
+          Left((LocalRollup.runByTags(residentSlice(rows, ws, params), sch,
+            params, spec.intervalNs, tagKeys),
             LocalRollup.outputSchemaByTags(params, tagKeys)))
         }
       else None
@@ -2399,14 +2110,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
         !Rollup.supports(p, spec.intervalNs, spec.fields.toSet, spec.digests))
       None
     else localRollupRows(p.metric, spec).map { case (rows, ws, sch) =>
-      // binary-searched [startNs, endNs] window slice (rows are sorted by
-      // window_start); LocalRollup re-applies the same bounds, so the
-      // slice is purely a scan reduction
-      val lo = lowerBound(ws, p.startNs)
-      val hi = math.max(lo, upperBound(ws, p.endNs.get))
-      val slice = java.util.Arrays.copyOfRange(
-        rows.asInstanceOf[Array[AnyRef]], lo, hi).asInstanceOf[Array[Row]]
-      (LocalRollup.run(slice, sch, p, spec.intervalNs),
+      (LocalRollup.run(residentSlice(rows, ws, p), sch, p, spec.intervalNs),
         LocalRollup.outputSchema(p))
     }
   }

@@ -562,6 +562,59 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  test("client: driver-resident rollup tier and cached rows stream over TCP") {
+    // those tiers answer with schema-less rows: the frame encoder must
+    // read them by ordinal from the result schema
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_rollup").toString
+    val eng = new TsdbEngine(spark, s"$dir/db")
+    val ex = new NbqlExecutor(eng)
+    val srv = new GraftTcpServer(ex, port = 0)
+    srv.start()
+    val c = NbqlClient.connect("127.0.0.1", srv.boundPort)
+    val Min = 60L * 1000000000L
+    try {
+      assert(eng.putBatch((0 until 120).map { i =>
+        graft.model.DataPoint("reqs", Map("host" -> s"h${i % 2}"), i * Min,
+          Map("value" -> FieldValue.ofDouble(if (i == 60) 1.0 else (i / 2).toDouble)))
+      }).isRight)
+      eng.registerRollup("reqs", Min, Seq("value"))
+      val range = s"QUERY reqs FROM 0 TO ${120 * Min - 1}"
+      val down = s"$range AGGREGATE BY 15m (avg(value), max(value), count(value))"
+      val delta = s"$range ANALYZE DELTA(value)"
+      def inProcess(q: String) = ex.execute(q) match {
+        case Right(r: ex.Rows @unchecked) => (r.schema, r.rowIterator().toSeq)
+        case other => fail(s"expected rows, got $other")
+      }
+      // first ask: the driver-resident rollup tier; the repeat: the cache
+      for (path <- Seq("local-rollup", "cache")) {
+        val got = c.query(down).rows
+        assert(eng.lastServePath == path, eng.lastServePath)
+        val (sch, want) = inProcess(down)
+        val aggCols = Seq("avg_value", "max_value", "count_value")
+        assert(got.nonEmpty && got.map(p => (p.tags, p.windowStart, p.aggregated)) ==
+          want.map(r => (r.getMap[String, String](sch.fieldIndex("tags")).toMap,
+            r.getLong(sch.fieldIndex("window_start")),
+            aggCols.map(n => n -> r.getAs[Number](sch.fieldIndex(n)).doubleValue()))))
+      }
+      for (path <- Seq("local-rollup-delta", "analyze-cache")) {
+        val got = c.query(delta).rows
+        assert(eng.lastServePath == path, eng.lastServePath)
+        val (sch, want) = inProcess(delta)
+        def at(n: String) = sch.fieldIndex(n)
+        assert(got.nonEmpty && got.map(p => (p.fields("series_key"),
+            p.fields("n_points"), p.fields("delta"), p.fields("increase"))) ==
+          want.map(r => (FieldValue.ofString(r.getString(at("series_key"))),
+            FieldValue.ofLong(r.getLong(at("n_points"))),
+            FieldValue.ofDouble(r.getDouble(at("delta"))),
+            FieldValue.ofDouble(r.getDouble(at("increase"))))))
+      }
+    } finally {
+      c.close()
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("interop: independent python wire client pushes and queries the live server") {
     // the script implements the frame/codec layer from scratch (struct +
     // its own CRC-32C) — agreement proves the wire format, not the JVM code
