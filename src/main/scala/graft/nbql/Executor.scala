@@ -161,10 +161,14 @@ class NbqlExecutor(val engine: TsdbEngine, snapshotDir: String => String = ident
         }
       }
 
-    /** `EXPLAIN QUERY …` (extension): the physical plan Spark would run
-      * for the RAW query — the engine plan BEFORE the serving tiers
-      * (cache/driver-resident paths are execution shortcuts, not plans).
-      * One `plan` column, one row per line of `explain("formatted")`. */
+    /** `EXPLAIN QUERY …` (extension): the physical plan Spark would run,
+      * BEFORE the serving tiers (cache/driver-resident paths are
+      * execution shortcuts, not plans). A plain QUERY prints the raw plan
+      * (parquet scan + merge); ANALYZE and GROUP BY TAGS print the plan
+      * the Spark tier runs — a rollup route's, or the analytic over the
+      * metric's persisted merged serving view (an in-memory scan; this
+      * builds the view if the metric's epoch has none yet). One `plan`
+      * column, one row per line of `explain("formatted")`. */
     case ExplainStatement(q) =>
       prepareQuery(q).map { params =>
         val df = (q.analyze, q.groupByTags) match {

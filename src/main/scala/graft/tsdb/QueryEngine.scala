@@ -51,12 +51,22 @@ object QueryEngine {
     * End=None → now; RELATIVE(d) → end = min(now, max data ts), start =
     * end − d (`engine2/adapter.go:1117-1120`, `:1236-1276`). Resolving
     * against max-data-ts needs one scalar action over the series-filtered
-    * frame (cheap: min/max come from parquet footer stats). */
-  def resolveRange(filtered: DataFrame, p: QueryParams): (Long, Long) = {
+    * frame, and only then is `filtered` evaluated. The max is taken over
+    * VISIBLE rows: a raw (pre-merge) frame passes its `tombstones`, so a
+    * deleted newest point never sets `end` — the same answer a merged
+    * frame (tombstones already applied, `Nil` here) gives. The version
+    * merge itself cannot move the max: it only collapses versions of one
+    * (series, ts), and a tombstone covering the newest version covers
+    * every older one. */
+  def resolveRange(filtered: => DataFrame, p: QueryParams,
+      tombstones: Seq[Tombstone] = Nil): (Long, Long) = {
     val now = p.nowNs.getOrElse(System.currentTimeMillis() * 1000000L)
     p.relativeNs match {
       case Some(d) =>
-        val maxTs = filtered.agg(max(col("timestamp"))).head().get(0)
+        val df = filtered
+        val visible =
+          if (tombstones.isEmpty) df else applyTombstones(withSeriesKey(df), tombstones)
+        val maxTs = visible.agg(max(col("timestamp"))).head().get(0)
         val dataMax = if (maxTs == null) now else maxTs.asInstanceOf[Long]
         val end = math.min(now, dataMax)
         (end - d, end)
@@ -69,6 +79,14 @@ object QueryEngine {
     * per tombstone, evaluated per row) gives way to a broadcast anti-join
     * — O(rows) with a hashed lookup instead of O(rows × tombstones). */
   private[graft] var antiJoinThreshold: Int = 64
+
+  /** `df` with the canonical `series_key`, reusing a present one (r18):
+    * frames off the storage layout or the keyed events view already carry
+    * it — recomputing would run the per-row lambda chain again for
+    * identical bytes. */
+  private[tsdb] def withSeriesKey(df: DataFrame): DataFrame =
+    if (df.columns.contains("series_key")) df
+    else df.withColumn("series_key", seriesKeyCol(col("metric"), col("tags")))
 
   /** survive-filter for tombstones: drop a point iff some tombstone covers
     * its series/time AND has seq >= the point's seq. */
@@ -120,13 +138,7 @@ object QueryEngine {
     * reference's merging iterator exposes (`iterator/iterator.go:244-294`)
     * and what compaction materializes. */
   def mergedView(points: DataFrame, tombstones: Seq[Tombstone]): DataFrame = {
-    // reuse a present series_key (r18): frames off the storage layout or
-    // the keyed events view already carry the canonical key — recomputing
-    // would run the per-row lambda chain again for identical bytes
-    val keyed =
-      if (points.columns.contains("series_key")) points
-      else points.withColumn("series_key",
-        seriesKeyCol(col("metric"), col("tags")))
+    val keyed = withSeriesKey(points)
     val w = Window.partitionBy(col("series_key"), col("timestamp"))
       .orderBy(col("seq").desc)
     val deduped = keyed.withColumn("__rn", row_number().over(w))
@@ -141,8 +153,11 @@ object QueryEngine {
   /** Steps 1-3 of the pipeline: series resolution, time range, series key,
     * and the single skew-safe hash-repartition. Split out so specs can
     * observe the partitioning directly (spark_partition_id spread).
-    * Returns the partitioned frame plus the resolved [start, end]. */
-  private[graft] def partitionedInput(points: DataFrame, p: QueryParams): (DataFrame, Long, Long) = {
+    * Returns the partitioned frame plus the resolved [start, end]; a
+    * RELATIVE range resolves against the rows `tombstones` leave visible
+    * ([[resolveRange]]). */
+  private[graft] def partitionedInput(points: DataFrame, p: QueryParams,
+      tombstones: Seq[Tombstone] = Nil): (DataFrame, Long, Long) = {
     // 1. series resolution: metric + tag equality (AND of equalities — the
     //    reference's bitmap intersection, `indexer/tag_index_manager2.go:247-280`)
     var df = points.filter(TagMatch.metricPred(p.metric))
@@ -153,7 +168,7 @@ object QueryEngine {
     //    restated against it — a filter on `timestamp` alone prunes row
     //    groups, but only a filter on the PARTITION column prunes whole
     //    date directories before any footer is read (asserted in PlanSpec).
-    val (startNs, endNs) = resolveRange(df, p)
+    val (startNs, endNs) = resolveRange(df, p, tombstones)
     df = df.filter(col("timestamp").between(startNs, endNs))
     if (points.columns.contains("date"))
       df = df.filter(col("date").between(
@@ -171,8 +186,7 @@ object QueryEngine {
     //    computed HERE, before the shuffle, and reused downstream:
     //    recomputing it post-shuffle would re-alias the attribute and
     //    orphan the child partitioning (= a second exchange).
-    if (!df.columns.contains("series_key")) // reuse a present key (r18)
-      df = df.withColumn("series_key", seriesKeyCol(col("metric"), col("tags")))
+    df = withSeriesKey(df)
     val timeKey =
       if (p.isDownsample) {
         val interval = p.downsampleNs.get
@@ -189,7 +203,7 @@ object QueryEngine {
 
   /** Full pipeline. `points` must have the canonical storage schema. */
   def run(points: DataFrame, p: QueryParams, tombstones: Seq[Tombstone] = Nil): DataFrame = {
-    val (input, startNs, endNs) = partitionedInput(points, p)
+    val (input, startNs, endNs) = partitionedInput(points, p, tombstones)
     var df = input
 
     //    latest-version dedup (M1). For downsample the window adds the

@@ -193,11 +193,8 @@ object Rollup {
       withDigests: Boolean = false,
       smooth: Seq[SmoothSpec] = Nil,
       seeds: Option[DataFrame] = None): DataFrame = {
-    val keyed0 =
-      if (merged.columns.contains("series_key")) merged
-      else merged.withColumn("series_key",
-        QueryEngine.seriesKeyCol(col("metric"), col("tags")))
-    buildPartials(keyed0, intervalNs, fields, withDigests, smooth, seeds)
+    buildPartials(QueryEngine.withSeriesKey(merged), intervalNs, fields,
+      withDigests, smooth, seeds)
   }
 
   /** [[build]] from the RAW (un-merged) point frame: fuses the
@@ -221,11 +218,7 @@ object Rollup {
       seeds: Option[DataFrame] = None,
       tombstones: Seq[Tombstone] = Nil): DataFrame = {
     require(intervalNs > 0, "rollup interval must be > 0")
-    val keyed0 =
-      if (points.columns.contains("series_key")) points
-      else points.withColumn("series_key",
-        QueryEngine.seriesKeyCol(col("metric"), col("tags")))
-    val bucketed = keyed0.withColumn("window_start",
+    val bucketed = QueryEngine.withSeriesKey(points).withColumn("window_start",
       col("timestamp") - pmod(col("timestamp"), lit(intervalNs)))
     val clustered =
       if (smooth.nonEmpty) bucketed.repartition(col("series_key"))

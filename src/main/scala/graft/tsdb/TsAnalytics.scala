@@ -62,11 +62,8 @@ object TsAnalytics {
       tombstones: Seq[Tombstone]): DataFrame = {
     var df = points.filter(TagMatch.metricPred(p.metric))
     p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    val (startNs, endNs) = QueryEngine.resolveRange(df, p)
-    df = df.filter(col("timestamp").between(startNs, endNs))
-    if (!df.columns.contains("series_key")) // reuse a present key (r18)
-      df = df.withColumn("series_key",
-        QueryEngine.seriesKeyCol(col("metric"), col("tags")))
+    val (startNs, endNs) = QueryEngine.resolveRange(df, p, tombstones)
+    df = QueryEngine.withSeriesKey(df.filter(col("timestamp").between(startNs, endNs)))
     df = df.repartition(col("series_key"))
     val w = Window.partitionBy(col("series_key"), col("timestamp"))
       .orderBy(col("seq").desc)
@@ -96,11 +93,8 @@ object TsAnalytics {
     require(splitNs > 0, s"splitNs must be positive, got $splitNs")
     var df = points.filter(TagMatch.metricPred(p.metric))
     p.tags.foreach { case (k, v) => df = df.filter(TagMatch.pred(k, v)) }
-    val (startNs, endNs) = QueryEngine.resolveRange(df, p)
-    df = df.filter(col("timestamp").between(startNs, endNs))
-    if (!df.columns.contains("series_key")) // reuse a present key (r18)
-      df = df.withColumn("series_key",
-        QueryEngine.seriesKeyCol(col("metric"), col("tags")))
+    val (startNs, endNs) = QueryEngine.resolveRange(df, p, tombstones)
+    df = QueryEngine.withSeriesKey(df.filter(col("timestamp").between(startNs, endNs)))
     df = df.withColumn("__chunk",
         col("timestamp") - pmod(col("timestamp"), lit(splitNs)))
       .repartition(col("series_key"), col("__chunk"))
@@ -856,11 +850,8 @@ object TsAnalytics {
       // (the shuffle carries (metric, window, key) partials, not
       // points). With tombstones the surviving row's seq decides
       // visibility, which needs the merge — the general path below.
-      val keyed =
-        if (points.columns.contains("series_key")) points
-        else points.withColumn("series_key",
-          QueryEngine.seriesKeyCol(col("metric"), col("tags")))
-      return keyed.filter(col("timestamp").between(startNs, endNs))
+      return QueryEngine.withSeriesKey(points)
+        .filter(col("timestamp").between(startNs, endNs))
         .withColumn("window_start",
           col("timestamp") - pmod(col("timestamp"), lit(windowNs)))
         .groupBy(col("metric"), col("window_start"))
@@ -902,7 +893,7 @@ object TsAnalytics {
     require(p.fill == FillNone && !p.emitEmptyWindows,
       "FILL/EMIT EMPTY WINDOWS are per-series shapes — not valid with GROUP BY TAGS")
     require(p.afterKey.isEmpty, "cursors don't apply to tag-grouped results")
-    val (input, startNs, endNs) = QueryEngine.partitionedInput(points, p)
+    val (input, startNs, endNs) = QueryEngine.partitionedInput(points, p, tombstones)
     // latest-version dedup + tombstones, same as the per-series pipeline
     val dedupKeys =
       if (p.isDownsample) Seq(col("series_key"), col("window_start"), col("timestamp"))

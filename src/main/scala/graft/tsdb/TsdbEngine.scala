@@ -852,10 +852,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     if (spec != null && byTagsRollupEligible(params, spec))
       Rollup.runByTags(rollupView(params.metric, spec), spec.intervalNs,
         params, tagKeys)
-    else {
-      val pts = loadPoints().getOrElse(TsdbEngine.emptyPoints(spark))
-      TsAnalytics.aggregateByTags(pts, params, tagKeys, loadTombstones())
-    }
+    else TsAnalytics.aggregateByTags(servingBase(params.metric), params, tagKeys)
   }
 
   private def byTagsRollupEligible(params: QueryParams, spec: RollupReg): Boolean =
@@ -863,12 +860,18 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       params.fill == FillNone && !params.emitEmptyWindows && params.afterKey.isEmpty
 
   /** `QUERY m … ANALYZE <op>` — the [[TsAnalytics]] pack over this
-    * engine's storage (NBQL extension), as the raw Spark plan. The
-    * protocol path serves through [[analyzeServingDF]], which fronts
-    * THIS with the result cache under a namespaced key
-    * ([[QueryCache.analyzeKeyOf]] — an ANALYZE can never collide with
-    * its plain-QUERY twin). LIMIT applies to the ordered analytic
-    * output. */
+    * engine's storage (NBQL extension), as the Spark plan the Spark tier
+    * runs: a registered rollup's partials where a route covers the shape,
+    * otherwise the analytic over the metric's persisted merged
+    * [[servingView]] (CORRELATE/RATIO: the union of both metrics' views)
+    * with no tombstones left to apply — the merge and the parquet scan
+    * are paid once per (metric, epoch), not per request. Results equal
+    * the [[TsAnalytics]] reference over raw points + tombstones
+    * (spec-asserted). The protocol path serves through
+    * [[analyzeServingDF]], which fronts THIS with the result cache under
+    * a namespaced key ([[QueryCache.analyzeKeyOf]] — an ANALYZE can never
+    * collide with its plain-QUERY twin). LIMIT applies to the ordered
+    * analytic output. */
   def analyze(params: QueryParams, spec: AnalyzeSpec,
       splitNs0: Option[Long] = None): DataFrame = {
     // smoothing-rate ranges checked HERE like registerRollup's — the NBQL
@@ -884,8 +887,8 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       case AnalyzeHoltBy(_, a, b, _) => rate(a, "alpha"); rate(b, "beta")
       case _ => ()
     }
-    val pts = loadPoints().getOrElse(TsdbEngine.emptyPoints(spark))
-    val tombs = loadTombstones()
+    // lazy: a rollup-served verb never builds the metric's view
+    lazy val pts = servingBase(params.metric)
     // SPLIT AUTO resolves against the query's ACTUAL range here, before
     // any analytic sees a width (TsAnalytics.SplitAuto scaladoc)
     val splitNs = splitNs0.map {
@@ -897,49 +900,44 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     }
     val df = spec match {
       case AnalyzeRate(f) =>
-        TsAnalytics.rate(pts, params, field = f, tombstones = tombs,
-          splitNs = splitNs)
+        TsAnalytics.rate(pts, params, field = f, splitNs = splitNs)
       case AnalyzeEwma(f, a) =>
-        TsAnalytics.ewmaSmooth(pts, params, a, field = f, tombstones = tombs,
-          splitNs = splitNs)
+        TsAnalytics.ewmaSmooth(pts, params, a, field = f, splitNs = splitNs)
       case AnalyzeHolt(f, a, b) =>
-        TsAnalytics.holtSmooth(pts, params, a, b, field = f,
-          tombstones = tombs, splitNs = splitNs)
+        TsAnalytics.holtSmooth(pts, params, a, b, field = f, splitNs = splitNs)
       case AnalyzeCumsum(f) =>
-        TsAnalytics.runningAggregates(pts, params, field = f,
-          tombstones = tombs, splitNs = splitNs)
+        TsAnalytics.runningAggregates(pts, params, field = f, splitNs = splitNs)
       case AnalyzeZScore(f, lb, th) =>
         // minPoints clamps to the lookback so small NBQL lookbacks are
         // legal (the grammar doesn't carry minPoints; 5 is the default
         // warm-up, `TsAnalytics.rollingZScore`)
         TsAnalytics.rollingZScore(pts, params, field = f, lookback = lb,
-          minPoints = math.min(5, lb), threshold = th, tombstones = tombs,
-          splitNs = splitNs)
+          minPoints = math.min(5, lb), threshold = th, splitNs = splitNs)
       case AnalyzeCorrelate(f, b, key, iv, mb) =>
-        val (s0, e0) = analyzeCrossRange(pts, params, b)
+        lazy val both = crossBase(params.metric, b)
+        val (s0, e0) = analyzeCrossRange(both, params, b)
         pairedFromRollups(params.metric, b, key, iv, s0, e0, f) match {
           case Some(paired) =>
             lastServePath = "rollup-correlate"
             TsAnalytics.correlateFinish(paired, mb)
           case None =>
-            TsAnalytics.correlate(pts, params.metric, b, key, iv, s0, e0,
-              field = f, minBuckets = mb, tombstones = tombs)
+            TsAnalytics.correlate(both, params.metric, b, key, iv, s0, e0,
+              field = f, minBuckets = mb)
         }
       case AnalyzeRatio(f, b, key, iv) =>
-        val (s0, e0) = analyzeCrossRange(pts, params, b)
+        lazy val both = crossBase(params.metric, b)
+        val (s0, e0) = analyzeCrossRange(both, params, b)
         pairedFromRollups(params.metric, b, key, iv, s0, e0, f) match {
           case Some(paired) =>
             lastServePath = "rollup-ratio"
             TsAnalytics.ratioFinish(paired)
           case None =>
-            TsAnalytics.ratio(pts, params.metric, b, key, iv, s0, e0,
-              field = f, tombstones = tombs)
+            TsAnalytics.ratio(both, params.metric, b, key, iv, s0, e0,
+              field = f)
         }
       case AnalyzeTopK(k, by, keys, asc) =>
-        TsAnalytics.topKGroups(pts, params, keys, k, by, tombstones = tombs,
-          ascending = asc)
-      case _ => analyzeRouted(AnalyzeRoutes.of(params, spec).get, pts, tombs,
-        splitNs)
+        TsAnalytics.topKGroups(pts, params, keys, k, by, ascending = asc)
+      case _ => analyzeRouted(AnalyzeRoutes.of(params, spec).get, pts, splitNs)
     }
     // keyset resume (round 13): per-series/windowed analytics order by
     // (series_key[, window_start|timestamp]) — AFTER filters strictly
@@ -968,13 +966,14 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * registered rollup's partial plan when the route covers the
     * registration and its gate passes over the persisted frame's
     * columns, the raw analytic otherwise; projected to the verb's
-    * columns. Tombstones are immaterial to the route — rollup views are
-    * built over the merged, tombstone-applied frame. A recurrence's
+    * columns. Both inputs are merged and tombstone-applied: the rollup
+    * view by its build, `pts` (the serving view, evaluated only when the
+    * raw analytic runs) by construction. A recurrence's
     * range-start condition reads the cached per-(metric, epoch) min
     * window bound, which answers the common from-the-start dashboard
     * with NO job; only a mid-range start pays the limit-1 probe. */
-  private def analyzeRouted(rt: AnalyzeRoute, pts: DataFrame,
-      tombs: Seq[Tombstone], splitNs: Option[Long]): DataFrame = {
+  private def analyzeRouted(rt: AnalyzeRoute, pts: => DataFrame,
+      splitNs: Option[Long]): DataFrame = {
     val p = rt.p
     val reg = rollupSpecs.get(p.metric)
     val routed = rt.spark
@@ -990,7 +989,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
       }
     rt.project(routed.getOrElse {
       lastServePath = "analyze-raw"
-      rt.raw(pts, tombs, splitNs)
+      rt.raw(pts, Nil, splitNs)
     })
   }
 
@@ -1170,23 +1169,33 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
   /** Range resolution for the cross-metric analytics (CORRELATE/RATIO),
     * which take raw bounds rather than `QueryParams`: the F6 default/
     * RELATIVE contract applied over BOTH metrics' points (the pair is
-    * one logical scan — `metric IN (a, b)`). */
-  private def analyzeCrossRange(pts: org.apache.spark.sql.DataFrame,
+    * one logical scan — `metric IN (a, b)`). `pts` is evaluated only for
+    * a RELATIVE range. */
+  private def analyzeCrossRange(pts: => org.apache.spark.sql.DataFrame,
       params: QueryParams, metricB: String): (Long, Long) =
     QueryEngine.resolveRange(
       pts.filter(col("metric").isin(params.metric, metricB)), params)
 
 
-  /** Serving base frame for `p`: the per-metric incremental serving view
-    * normally; for a PREFIX metric (`web.*` fan-out) the per-metric view
-    * machinery doesn't apply, so the base is the full merged view — a
-    * fresh plan, correct by construction, never a stale or empty
-    * per-metric frame. */
-  private def servingBase(p: QueryParams): org.apache.spark.sql.DataFrame =
-    if (TagMatch.isPrefix(p.metric))
+  /** Serving base frame for `metric`: the per-metric incremental serving
+    * view normally; for a PREFIX metric (`web.*` fan-out) the per-metric
+    * view machinery doesn't apply, so the base is the full merged view —
+    * a fresh plan, correct by construction, never a stale or empty
+    * per-metric frame. Either way merged and tombstone-applied: readers
+    * pass no tombstones. */
+  private def servingBase(metric: String): org.apache.spark.sql.DataFrame =
+    if (TagMatch.isPrefix(metric))
       QueryEngine.mergedView(
         loadPoints().getOrElse(TsdbEngine.emptyPoints(spark)), loadTombstones())
-    else servingView(p.metric)
+    else servingView(metric)
+
+  /** CORRELATE/RATIO input: the union of both metrics' serving views (a
+    * metric without data may lack the `date` column, hence
+    * `allowMissingColumns`). */
+  private def crossBase(metricA: String,
+      metricB: String): org.apache.spark.sql.DataFrame =
+    servingBase(metricA).unionByName(servingBase(metricB),
+      allowMissingColumns = true)
 
   /** Serving-tier [[queryByTags]]: when a registered rollup covers the
     * shape AND its partial frame is driver-resident, the tag-grouped
@@ -1375,10 +1384,16 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * metric, persisted per metric EPOCH: a cold dashboard query replans
     * only filter+shape over the in-memory relation instead of re-running
     * the parquet scan + merge shuffle (~4x lower per-query planning+exec
-    * cost; see Bench `query_qps_cold`). Keyed by `metricEpoch`, so commits
-    * to OTHER metrics neither invalidate nor rebuild this one; the frame
-    * reads only this metric's files, so vacuum of other metrics' data can
-    * never break a cached plan.
+    * cost; see Bench `query_qps_cold`). It is the input of every
+    * single-metric Spark-tier read: [[queryServing]] and the serving
+    * tier's scans, every [[analyze]] verb not served by a rollup
+    * (CORRELATE/RATIO over the union of both metrics' views), the Spark
+    * branch of [[queryByTags]] and `SHOW CARDINALITY FROM m`
+    * ([[showCardinality]]); the driver-resident tier is collected from
+    * it. The first of these reads at a new epoch pays the build. Keyed
+    * by `metricEpoch`, so commits to OTHER metrics neither invalidate nor
+    * rebuild this one; the frame reads only this metric's files, so
+    * vacuum of other metrics' data can never break a cached plan.
     *
     * Maintenance is INCREMENTAL, like the rollup store: merge semantics
     * are date-local ((series, ts) determines the date partition), so a
@@ -1485,7 +1500,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     * |series| × windows rows read instead of every point). */
   def queryServing(params: QueryParams): DataFrame =
     rollupRoute(params).getOrElse(
-      QueryEngine.runMerged(servingBase(params), params))
+      QueryEngine.runMerged(servingBase(params.metric), params))
 
   // ---- rollup acceleration: materialized (metric, date) partials --------
 
@@ -2244,7 +2259,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
             }
           }
         case None =>
-          val df = QueryEngine.runMerged(servingBase(params), params, ordered = false)
+          val df = QueryEngine.runMerged(servingBase(params.metric), params, ordered = false)
           if (params.limit.isDefined || params.isFinalAgg)
             // already bounded: TakeOrdered / single-row aggregate
             (driverOrder(df.collect(), params), df.schema)
@@ -2260,7 +2275,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
               truncated = true
               if (!pageOnTruncation) (Array.empty[Row], df.schema)
               else {
-                val page = QueryEngine.runMerged(servingBase(params),
+                val page = QueryEngine.runMerged(servingBase(params.metric),
                   params.copy(limit = Some(budget)))
                 (page.collect(), page.schema)
               }
@@ -2307,20 +2322,24 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
   /** `SHOW CARDINALITY [FROM m] [BY dur]` (I-series extension): distinct
     * active series + point volume per metric, windowed when `windowNs`
     * is given — [[TsAnalytics.seriesCardinality]] over this engine's
-    * merged storage. Without a window the grouping is by metric alone —
-    * emitted as window_start 0 for schema parity with the windowed form,
-    * with NO window arithmetic involved (a sentinel interval would split
-    * or drop timestamps near Long.MaxValue). */
+    * merged storage. `FROM m` reads m's persisted merged [[servingView]]
+    * (a prefix: the merged view of the store), which needs no merge or
+    * tombstones; the store-wide form merges the raw points. Without a
+    * window the grouping is by metric alone — emitted as window_start 0
+    * for schema parity with the windowed form, with NO window arithmetic
+    * involved (a sentinel interval would split or drop timestamps near
+    * Long.MaxValue). */
   def showCardinality(metric: Option[String],
       windowNs: Option[Long]): DataFrame = {
-    val pts0 = loadPoints().getOrElse(TsdbEngine.emptyPoints(spark))
-    val pts = metric.fold(pts0)(m => pts0.filter(TagMatch.metricPred(m)))
+    val merged = metric.map(m => servingBase(m).filter(TagMatch.metricPred(m)))
+    def raw = loadPoints().getOrElse(TsdbEngine.emptyPoints(spark))
     windowNs match {
       case Some(w) =>
-        TsAnalytics.seriesCardinality(pts, w,
-          startNs = 0L, endNs = Long.MaxValue, tombstones = loadTombstones())
+        TsAnalytics.seriesCardinality(merged.getOrElse(raw), w,
+          startNs = 0L, endNs = Long.MaxValue,
+          tombstones = if (merged.isDefined) Nil else loadTombstones())
       case None =>
-        QueryEngine.mergedView(pts, loadTombstones())
+        merged.getOrElse(QueryEngine.mergedView(raw, loadTombstones()))
           .groupBy(col("metric"))
           .agg(count_distinct(col("series_key")).as("n_series"),
             count(lit(1)).as("n_points"))
@@ -2420,10 +2439,7 @@ class TsdbEngine(val spark: SparkSession, val rootDir: String) {
     var df = loadPoints().getOrElse(emptyPoints(spark))
       .filter(col("metric") === metric)
     tags.foreach { case (k, v) => df = df.filter(col("tags").getItem(k) === v) }
-    if (!df.columns.contains("series_key")) // reuse a present key (r18)
-      df = df.withColumn("series_key",
-        QueryEngine.seriesKeyCol(col("metric"), col("tags")))
-    df.select("series_key").distinct().orderBy("series_key")
+    QueryEngine.withSeriesKey(df).select("series_key").distinct().orderBy("series_key")
   }
 
   // ---- maintenance ------------------------------------------------------

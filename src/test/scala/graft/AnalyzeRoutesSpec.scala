@@ -17,27 +17,6 @@ class AnalyzeRoutesSpec extends SparkSpec {
   private val Grain = 10 * Sec
   private val Alpha = 0.25
 
-  /** One instance of every [[AnalyzeSpec]] case class, built from its
-    * constructor's parameter types: "v" for strings (the field), two
-    * grains for longs (window, interval, horizon), [[Alpha]] for doubles
-    * (smoothing rates, thresholds), 3 for ints. */
-  private def everySpec: Seq[AnalyzeSpec] = {
-    import scala.reflect.runtime.universe._
-    val mirror = runtimeMirror(getClass.getClassLoader)
-    typeOf[AnalyzeSpec].typeSymbol.asClass.knownDirectSubclasses.toSeq
-      .map { sym =>
-        val ctor = mirror.runtimeClass(sym.asClass).getConstructors.head
-        ctor.newInstance(ctor.getParameterTypes.toSeq.map { c =>
-          if (c == classOf[String]) "v"
-          else if (c == java.lang.Long.TYPE) Long.box(2 * Grain)
-          else if (c == java.lang.Double.TYPE) Double.box(Alpha)
-          else if (c == java.lang.Integer.TYPE) Int.box(3)
-          else if (c == java.lang.Boolean.TYPE) Boolean.box(false)
-          else Nil
-        }.asInstanceOf[Seq[AnyRef]]: _*).asInstanceOf[AnalyzeSpec]
-      }.sortBy(_.toString)
-  }
-
   /** Three live series over 90 s at 1 s: integer counter values with
     * resets and flat runs, gaps (one-sample and empty rollup windows),
     * an overwrite batch, a deleted range, a deleted point and a deleted
@@ -76,7 +55,8 @@ class AnalyzeRoutesSpec extends SparkSpec {
     val p = QueryParams("m", startNs = 0L, endNs = Some(90 * Sec - 1))
     val pts = eng.loadPoints().get
     val tombs = eng.loadTombstones()
-    val routed = everySpec.flatMap(s => AnalyzeRoutes.of(p, s).map(s -> _))
+    val routed = AnalyzeRoutesSpec.everySpec(Grain, Alpha)
+      .flatMap(s => AnalyzeRoutes.of(p, s).map(s -> _))
     assert(routed.size >= 13, routed.map(_._1).mkString(", "))
     for ((spec, rt) <- routed) {
       val raw = rt.project(rt.raw(pts, tombs, None))
@@ -104,5 +84,29 @@ class AnalyzeRoutesSpec extends SparkSpec {
         assert(eng.lastServePath == rt.sparkPath, s"$spec: ${eng.lastServePath}")
       }
     }
+  }
+}
+
+object AnalyzeRoutesSpec {
+
+  /** One instance of every [[AnalyzeSpec]] case class, built from its
+    * constructor's parameter types: "v" for strings (the field), two
+    * grains for longs (window, interval, horizon), `alpha` for doubles
+    * (smoothing rates, thresholds), 3 for ints. */
+  def everySpec(grain: Long, alpha: Double): Seq[AnalyzeSpec] = {
+    import scala.reflect.runtime.universe._
+    val mirror = runtimeMirror(getClass.getClassLoader)
+    typeOf[AnalyzeSpec].typeSymbol.asClass.knownDirectSubclasses.toSeq
+      .map { sym =>
+        val ctor = mirror.runtimeClass(sym.asClass).getConstructors.head
+        ctor.newInstance(ctor.getParameterTypes.toSeq.map { c =>
+          if (c == classOf[String]) "v"
+          else if (c == java.lang.Long.TYPE) Long.box(2 * grain)
+          else if (c == java.lang.Double.TYPE) Double.box(alpha)
+          else if (c == java.lang.Integer.TYPE) Int.box(3)
+          else if (c == java.lang.Boolean.TYPE) Boolean.box(false)
+          else Nil
+        }.asInstanceOf[Seq[AnyRef]]: _*).asInstanceOf[AnalyzeSpec]
+      }.sortBy(_.toString)
   }
 }

@@ -618,6 +618,8 @@ class TsdbQuerySpec extends SparkSpec {
     eng.reserveSeqBlock()
     eng.deletePoint("cpu.usage", Map("host" -> "h1"), 30 * M)
     eng.deleteRange("cpu.usage", Map("host" -> "h2"), 100 * M, 140 * M)
+    // h1's newest point: a RELATIVE range must not end at a deleted row
+    eng.deletePoint("cpu.usage", Map("host" -> "h1"), 190 * M)
 
     def same(p: QueryParams): Unit = {
       val a = eng.query(p).collect().map(_.toString).sorted.toSeq
@@ -633,6 +635,8 @@ class TsdbQuerySpec extends SparkSpec {
     same(QueryParams("cpu.usage", endNs = Some(199 * M), downsampleNs = Some(60 * M),
       aggs = Seq(AggSpec("sum", "value")), emitEmptyWindows = true))
     same(QueryParams("cpu.usage", relativeNs = Some(50 * M), nowNs = Some(1000 * M)))
+    same(QueryParams("cpu.usage", Map("host" -> "h1"),
+      relativeNs = Some(35 * M), nowNs = Some(1000 * M)))
     same(QueryParams("cpu.usage", endNs = Some(1000 * M),
       afterKey = Some(Cursor(100 * M, "cpu.usage"))))
 
@@ -651,6 +655,8 @@ class TsdbQuerySpec extends SparkSpec {
     sameOrdered(QueryParams("cpu.usage", endNs = Some(1000 * M), limit = Some(7)))
     sameOrdered(QueryParams("cpu.usage", Map("host" -> "h2"),
       relativeNs = Some(50 * M), nowNs = Some(1000 * M)))
+    sameOrdered(QueryParams("cpu.usage", Map("host" -> "h1"),
+      relativeNs = Some(35 * M), nowNs = Some(1000 * M)))
     sameOrdered(QueryParams("cpu.usage", endNs = Some(1000 * M),
       afterKey = Some(Cursor(100 * M, "cpu.usage")), limit = Some(3),
       order = Descending))
